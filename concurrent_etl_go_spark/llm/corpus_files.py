@@ -21,13 +21,12 @@ freed via ``release_caches()``.
 from __future__ import annotations
 
 import os
-import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from concurrent_etl_go_spark.operators.registry import query, track_cache
+from concurrent_etl_go_spark.operators.registry import checkpoint_and_drop, query
 from concurrent_etl_go_spark.sources.readers import (
     read_binary_files,
     read_table,
@@ -60,13 +59,6 @@ def _write_files(df: DataFrame, out_dir: str) -> None:
 
     os.makedirs(out_dir, exist_ok=True)
     df.foreachPartition(write_partition)
-
-
-def _checkpoint_and_drop(df: DataFrame, tmp_dir: str) -> DataFrame:
-    out = df.localCheckpoint(eager=True)
-    track_cache(out)
-    shutil.rmtree(tmp_dir, ignore_errors=True)
-    return out
 
 
 def _fname() -> F.Column:
@@ -143,7 +135,7 @@ def corpus_file_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_copies",
         )
     )
-    return _checkpoint_and_drop(deduped, tmp)
+    return checkpoint_and_drop(deduped, tmp)
 
 
 @query(
@@ -193,4 +185,4 @@ def multimodal_binary_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("n_chars"),
     )
-    return _checkpoint_and_drop(features, tmp)
+    return checkpoint_and_drop(features, tmp)

@@ -206,6 +206,10 @@ def _source_fingerprint(sf_dir: str) -> list[int]:
     return [st.st_size, st.st_mtime_ns]
 
 
+class EmptyCorpusError(ValueError):
+    """``fit_ivfpq`` found no vectors to seed its quantizers from."""
+
+
 def fit_ivfpq(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, dict]:
     """Fit the IVF-PQ index IN MEMORY: coarse quantizer + PQ codebooks +
     the per-vector ``(vec_id, cluster, code_0..code_{M-1})`` codes frame,
@@ -241,7 +245,7 @@ def fit_ivfpq(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, dict]:
         base.where(F.col("vec_id") < n_seed).orderBy("vec_id").collect()
     )
     if not seed_rows:
-        raise ValueError(f"no vectors under {sf_dir}")
+        raise EmptyCorpusError(f"no vectors under {sf_dir}")
     dim = len(seed_rows[0].v)
     bounds = _subspace_bounds(dim)
     sub_dim = dim // PQ_SUBSPACES
@@ -473,7 +477,10 @@ def similarity_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import math
 
-    codes, meta = fit_ivfpq(spark, sf_dir)
+    try:
+        codes, meta = fit_ivfpq(spark, sf_dir)
+    except EmptyCorpusError:  # zero-row embeddings: nothing to rank
+        return spark.createDataFrame([], "vec_id long, sim double")
     centroids, codebooks = meta["centroids"], meta["codebooks"]
     # the fit scoped-persisted exactly this (vec_id, v) plan, so the
     # query-row lookup and the rerank below are cache reads (no second

@@ -166,11 +166,17 @@ def embeddings_top_component(
             for i, js in gmap.items()
         }
         m = max(abs(v) for v in raw.values())
+        if m == 0:
+            # zero Gram matrix (all-zero vectors): the oracle's HUGEINT
+            # % 0 and // 0 are NULL, and SUM over the all-NULL iterate
+            # stays NULL in every later round
+            x = dict.fromkeys(raw)
+            break
         x = {
             i: (s - (s % m)) // m
             for i, s in ((i, v * _X_SCALE) for i, v in raw.items())
         }
     return spark.createDataFrame(
-        sorted((int(i), int(w)) for i, w in x.items()),
+        sorted(x.items()),
         "dim long, weight_e6 long",
     )

@@ -35,13 +35,12 @@ the caller's terminal action.
 
 from __future__ import annotations
 
-import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from concurrent_etl_go_spark.operators.registry import query, track_cache
+from concurrent_etl_go_spark.operators.registry import checkpoint_and_drop, query
 from concurrent_etl_go_spark.sources import versioned as vt
 from concurrent_etl_go_spark.sources.readers import read_table
 
@@ -67,17 +66,6 @@ def _base_and_updates(
         "o_custkey", F.col("o_custkey") + F.lit(1_000_000)
     )
     return base, ups
-
-
-def _checkpoint_and_drop(df: DataFrame, *tmp_dirs: str) -> DataFrame:
-    """Materialize the (small, O(changes)) result into block storage so
-    the scratch table files can be deleted immediately; the blocks are
-    registered for ``release_caches()``."""
-    out = df.localCheckpoint(eager=True)
-    track_cache(out)
-    for d in tmp_dirs:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
 
 
 @query(
@@ -111,7 +99,7 @@ def cdc_table_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     changes = vt.table_changes(spark, tmp, 1, 2).select(
         *_COLS, F.col("_change_type").alias("change_type")
     )
-    return _checkpoint_and_drop(changes, tmp)
+    return checkpoint_and_drop(changes, tmp)
 
 
 @query(
@@ -156,7 +144,7 @@ def cdc_apply_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     changes = vt.table_changes(spark, src, 1, 2)
     vt.apply_changes(spark, dst, changes, key="o_orderkey", batch_id=-2)
     replica = vt.read_table_version(spark, dst).select(*_COLS)
-    return _checkpoint_and_drop(replica, src, dst)
+    return checkpoint_and_drop(replica, src, dst)
 
 
 @query(
@@ -211,4 +199,4 @@ def cdc_mirror_replicate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey",
         F.lit("|".join(modes)).alias("sync_modes"),
     )
-    return _checkpoint_and_drop(replica, src, dst)
+    return checkpoint_and_drop(replica, src, dst)

@@ -21,6 +21,7 @@ Convention for oracle safety (see SURVEY §7.4.6):
 
 from __future__ import annotations
 
+import shutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -133,6 +134,17 @@ def checkpoint_count(df: DataFrame) -> tuple[DataFrame, int]:
     n = out.count()
     _SCOPED_CACHES.append(out)
     return out, n
+
+
+def checkpoint_and_drop(df: DataFrame, *tmp_dirs: str) -> DataFrame:
+    """Materialize the (small) result into block storage so the scratch
+    table files it was read from can be deleted immediately; the blocks
+    are registered for ``release_caches()``."""
+    out = df.localCheckpoint(eager=True)
+    _SCOPED_CACHES.append(out)
+    for d in tmp_dirs:
+        shutil.rmtree(d, ignore_errors=True)
+    return out
 
 
 def release_df(df: DataFrame) -> None:

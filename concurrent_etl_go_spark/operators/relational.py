@@ -16,10 +16,6 @@ from concurrent_etl_go_spark.operators.registry import query
 from concurrent_etl_go_spark.sources.readers import read_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return read_table(spark, sf_dir, name)
-
-
 # --------------------------------------------------------------------------
 # Filter / project
 # --------------------------------------------------------------------------
@@ -36,7 +32,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Predicate + projection; both push down to the parquet scan."""
     return (
-        _t(spark, sf_dir, "lineitem")
+        read_table(spark, sf_dir, "lineitem")
         .where(
             (F.col("l_shipdate") < F.lit("1995-09-01").cast("timestamp"))
             & (F.col("l_discount") > 0.02)
@@ -53,7 +49,7 @@ def filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def project_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _t(spark, sf_dir, "customer").select(
+    return read_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("id"),
         F.upper("c_name").alias("name_upper"),
         F.col("c_acctbal").alias("balance"),
@@ -95,7 +91,7 @@ def agg_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     variance, the cross-engine/cross-run flake the decimal path
     eliminates; quantity and the averages stay double (integer-valued /
     small-magnitude, far from the hazard)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.where(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
@@ -129,7 +125,7 @@ def agg_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        _t(spark, sf_dir, "lineitem")
+        read_table(spark, sf_dir, "lineitem")
         .groupBy("l_returnflag")
         .agg(
             F.countDistinct("l_partkey").alias("n_parts"),
@@ -153,7 +149,7 @@ def agg_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        _t(spark, sf_dir, "events")
+        read_table(spark, sf_dir, "events")
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -175,7 +171,7 @@ def agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        _t(spark, sf_dir, "lineitem")
+        read_table(spark, sf_dir, "lineitem")
         .rollup("l_returnflag", "l_linestatus")
         .agg(
             F.round(F.sum("l_quantity"), 4).alias("sum_qty"),
@@ -195,7 +191,7 @@ def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        _t(spark, sf_dir, "lineitem")
+        read_table(spark, sf_dir, "lineitem")
         .cube("l_returnflag", "l_linestatus")
         .agg(
             lib.exact_money_sum(F.col("l_extendedprice")).alias("sum_price"),
@@ -217,7 +213,7 @@ def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the exact_money_sum_sql fragment is valid in BOTH dialects, so the
     # Spark SQL text shares it with the oracle verbatim
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("__ceg_orders")
+    read_table(spark, sf_dir, "orders").createOrReplaceTempView("__ceg_orders")
     return spark.sql(
         f"""
         SELECT o_orderstatus, o_orderpriority,
@@ -248,9 +244,9 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 def join_inner_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Star-join: fact stays partitioned; dimension sides broadcast (no fact
     shuffle for the joins — only the final group-by shuffles)."""
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
+    orders = read_table(spark, sf_dir, "orders")
+    customer = read_table(spark, sf_dir, "customer")
+    nation = read_table(spark, sf_dir, "nation")
     return (
         orders.join(
             F.broadcast(customer), F.col("o_custkey") == F.col("c_custkey")
@@ -283,11 +279,13 @@ def join_inner_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
 def join_q3_top_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3-shaped: selective dimension filter broadcast against the
     fact, aggregate, deterministic top-10."""
-    cust = _t(spark, sf_dir, "customer").where(F.col("c_mktsegment") == "BUILDING")
-    orders = _t(spark, sf_dir, "orders").where(
+    cust = read_table(spark, sf_dir, "customer").where(
+        F.col("c_mktsegment") == "BUILDING"
+    )
+    orders = read_table(spark, sf_dir, "orders").where(
         F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp")
     )
-    li = _t(spark, sf_dir, "lineitem").where(
+    li = read_table(spark, sf_dir, "lineitem").where(
         F.col("l_shipdate") > F.lit("1996-01-01").cast("timestamp")
     )
     return (
@@ -313,8 +311,8 @@ def join_q3_top_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    cust = read_table(spark, sf_dir, "customer")
+    orders = read_table(spark, sf_dir, "orders")
     return (
         cust.join(orders, F.col("o_custkey") == F.col("c_custkey"), "left")
         .groupBy("c_custkey")
@@ -333,8 +331,8 @@ def join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def join_right(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    cust = read_table(spark, sf_dir, "customer")
+    orders = read_table(spark, sf_dir, "orders")
     return (
         orders.join(cust, F.col("o_custkey") == F.col("c_custkey"), "right")
         .groupBy("c_mktsegment")
@@ -359,12 +357,12 @@ def join_right(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = (
-        _t(spark, sf_dir, "customer")
+        read_table(spark, sf_dir, "customer")
         .groupBy(F.col("c_nationkey").alias("nk"))
         .agg(F.count(F.lit(1)).alias("n_cust"))
     )
     s = (
-        _t(spark, sf_dir, "supplier")
+        read_table(spark, sf_dir, "supplier")
         .groupBy(F.col("s_nationkey").alias("snk"))
         .agg(F.count(F.lit(1)).alias("n_supp"))
     )
@@ -384,8 +382,10 @@ def join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    big_orders = _t(spark, sf_dir, "orders").where(F.col("o_totalprice") > 100000)
+    cust = read_table(spark, sf_dir, "customer")
+    big_orders = read_table(spark, sf_dir, "orders").where(
+        F.col("o_totalprice") > 100000
+    )
     return cust.join(
         big_orders, F.col("o_custkey") == F.col("c_custkey"), "left_semi"
     ).select("c_custkey", "c_name")
@@ -399,8 +399,8 @@ def join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    cust = read_table(spark, sf_dir, "customer")
+    orders = read_table(spark, sf_dir, "orders")
     return cust.join(
         orders, F.col("o_custkey") == F.col("c_custkey"), "left_anti"
     ).select("c_custkey", "c_name")
@@ -432,7 +432,9 @@ def join_range_band(spark: SparkSession, sf_dir: str) -> DataFrame:
         "band string, lo double, hi double",
     )
     return (
-        lib.band_join(_t(spark, sf_dir, "orders"), bands, "o_totalprice", "lo", "hi")
+        lib.band_join(
+            read_table(spark, sf_dir, "orders"), bands, "o_totalprice", "lo", "hi"
+        )
         .groupBy("band")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -459,8 +461,8 @@ def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     Uses the bounded cogroup/merge_asof form (``lib.asof_join_merge``) —
     the rank-based ``lib.asof_join`` is its oracle twin (pytest asserts
     equality; a hot key would explode its pre-rank intermediate)."""
-    events = _t(spark, sf_dir, "events")
-    orders = _t(spark, sf_dir, "orders")
+    events = read_table(spark, sf_dir, "events")
+    orders = read_table(spark, sf_dir, "orders")
     joined = lib.asof_join_merge(
         events.select("event_id", "user_id", "ts"),
         orders.select("o_custkey", "o_orderkey", "o_orderdate"),
@@ -491,7 +493,9 @@ def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def window_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lib.top_k_per_group(
-        _t(spark, sf_dir, "part").select("p_brand", "p_partkey", "p_retailprice"),
+        read_table(spark, sf_dir, "part").select(
+            "p_brand", "p_partkey", "p_retailprice"
+        ),
         group_cols=["p_brand"],
         order_cols=[F.col("p_retailprice").desc(), F.col("p_partkey")],
         k=2,
@@ -509,7 +513,7 @@ def window_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def window_lag_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return _t(spark, sf_dir, "events").select(
+    return read_table(spark, sf_dir, "events").select(
         "event_id",
         F.round(F.col("value") - F.lag("value").over(w), 4).alias("delta"),
     )
@@ -531,7 +535,7 @@ def window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("l_shipdate", "l_orderkey", "l_linenumber")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    return _t(spark, sf_dir, "lineitem").select(
+    return read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey",
         "l_linenumber",
         F.round(F.sum("l_quantity").over(w), 4).alias("running_qty"),
@@ -550,7 +554,7 @@ def window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def window_rank_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("c_mktsegment").orderBy(F.col("c_acctbal").desc())
-    return _t(spark, sf_dir, "customer").select(
+    return read_table(spark, sf_dir, "customer").select(
         "c_custkey",
         F.rank().over(w).cast("long").alias("rnk"),
         F.dense_rank().over(w).cast("long").alias("drnk"),
@@ -573,7 +577,7 @@ def sort_limit_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global top-k: Spark plans this as TakeOrderedAndProject — per-partition
     top-k then a k-row merge on the driver; no global sort materialized."""
     return (
-        _t(spark, sf_dir, "customer")
+        read_table(spark, sf_dir, "customer")
         .select("c_custkey", "c_name", "c_acctbal")
         .orderBy(F.col("c_acctbal").desc(), F.col("c_custkey"))
         .limit(10)
@@ -596,8 +600,12 @@ def sort_limit_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def set_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
-    s = _t(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
+    c = read_table(spark, sf_dir, "customer").select(
+        F.col("c_nationkey").alias("nationkey")
+    )
+    s = read_table(spark, sf_dir, "supplier").select(
+        F.col("s_nationkey").alias("nationkey")
+    )
     return c.unionByName(s).groupBy("nationkey").agg(F.count(F.lit(1)).alias("n"))
 
 
@@ -610,8 +618,12 @@ def set_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
-    s = _t(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
+    c = read_table(spark, sf_dir, "customer").select(
+        F.col("c_nationkey").alias("nationkey")
+    )
+    s = read_table(spark, sf_dir, "supplier").select(
+        F.col("s_nationkey").alias("nationkey")
+    )
     return c.intersect(s)
 
 
@@ -624,6 +636,10 @@ def set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
-    n = _t(spark, sf_dir, "nation").select(F.col("n_nationkey").alias("nationkey"))
-    s = _t(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
+    n = read_table(spark, sf_dir, "nation").select(
+        F.col("n_nationkey").alias("nationkey")
+    )
+    s = read_table(spark, sf_dir, "supplier").select(
+        F.col("s_nationkey").alias("nationkey")
+    )
     return n.subtract(s)  # EXCEPT (distinct) semantics, matching the SQL oracle

@@ -10,10 +10,6 @@ from concurrent_etl_go_spark.operators.registry import query
 from concurrent_etl_go_spark.sources.readers import read_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return read_table(spark, sf_dir, name)
-
-
 @query(
     "join_q5_local_supplier",
     oracle="""
@@ -35,15 +31,15 @@ def join_q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape: 6-table star join. The fact (lineitem) joins orders
     on its partition key; every dimension side broadcasts, so the fact is
     shuffled exactly once (for the orders join) at any scale."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders").where(
+    li = read_table(spark, sf_dir, "lineitem")
+    orders = read_table(spark, sf_dir, "orders").where(
         (F.col("o_orderdate") >= F.lit("1995-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
     )
-    cust = _t(spark, sf_dir, "customer")
-    supp = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
+    cust = read_table(spark, sf_dir, "customer")
+    supp = read_table(spark, sf_dir, "supplier")
+    nation = read_table(spark, sf_dir, "nation")
+    region = read_table(spark, sf_dir, "region")
     return (
         li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
@@ -78,7 +74,7 @@ def agg_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``quantile_cont``); the approximate variant is ``agg_approx`` below.
     One array-quantile aggregate (single value buffer per group) instead of
     three scalar ones."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     pcts = F.percentile(
         "l_extendedprice", F.array(F.lit(0.5), F.lit(0.9), F.lit(0.99))
     )
@@ -98,7 +94,7 @@ def agg_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate distinct (HLL) + approximate quantiles — the 100 TB
     substitutes for their exact forms."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.approx_count_distinct("l_partkey").alias("approx_parts"),
         F.percentile_approx("l_extendedprice", F.lit(0.5), F.lit(10000)).alias(
@@ -119,7 +115,7 @@ def agg_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot with a fixed value list (the scalable form — no value
     discovery pass); equivalent to conditional aggregation."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return (
         li.groupBy("l_returnflag")
         .pivot("l_linestatus", ["O", "F"])
@@ -138,7 +134,7 @@ def agg_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def unpivot_stack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unpivot (wide -> long) via the native unpivot/melt operator."""
-    cust = _t(spark, sf_dir, "customer").select(
+    cust = read_table(spark, sf_dir, "customer").select(
         "c_custkey",
         F.col("c_acctbal").alias("acctbal"),
         F.col("c_nationkey").cast("double").alias("nationkey"),
@@ -158,7 +154,7 @@ def unpivot_stack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def distinct_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _t(spark, sf_dir, "lineitem").select(
+    return read_table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_linestatus", "l_shipdate"
     ).distinct()
 
@@ -176,7 +172,7 @@ def distinct_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
 def scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar subquery (computed once, broadcast into the predicate)."""
     # prefixed view name: never clobber a caller's own temp views
-    _t(spark, sf_dir, "customer").createOrReplaceTempView("__ceg_customer")
+    read_table(spark, sf_dir, "customer").createOrReplaceTempView("__ceg_customer")
     return spark.sql(
         """
         SELECT c_custkey, c_acctbal,
@@ -204,7 +200,7 @@ def correlated_exists_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape: correlated EXISTS decorrelated by Catalyst into a
     semi-join."""
     for name in ("orders", "lineitem"):
-        _t(spark, sf_dir, name).createOrReplaceTempView(f"__ceg_{name}")
+        read_table(spark, sf_dir, name).createOrReplaceTempView(f"__ceg_{name}")
     return spark.sql(
         """
         SELECT o_orderpriority, COUNT(*) AS n_orders

@@ -10,10 +10,6 @@ from concurrent_etl_go_spark.operators.registry import query
 from concurrent_etl_go_spark.sources.readers import read_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return read_table(spark, sf_dir, name)
-
-
 @query(
     "agg_minmax_by",
     oracle="""
@@ -29,7 +25,7 @@ def agg_minmax_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     """argmax/argmin aggregates (max_by/min_by). Deterministic here because
     o_totalprice values are distinct within each status group at the tested
     scales; ties would be engine-defined."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     return orders.groupBy("o_orderstatus").agg(
         F.max_by("o_orderkey", "o_totalprice").alias("biggest_order"),
         F.min_by("o_orderkey", "o_totalprice").alias("smallest_order"),
@@ -49,7 +45,7 @@ def agg_minmax_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def agg_corr_covar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.round(F.corr("l_quantity", "l_extendedprice"), 4).alias(
             "qty_price_corr"
@@ -78,7 +74,7 @@ def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("c_acctbal")
         .rangeBetween(-100, 100)
     )
-    return _t(spark, sf_dir, "customer").select(
+    return read_table(spark, sf_dir, "customer").select(
         "c_custkey", F.count(F.lit(1)).over(w).alias("peers_within_100")
     )
 
@@ -96,7 +92,7 @@ def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 def filter_in_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IN-subquery predicate (planned as a semi-join)."""
     for name in ("orders", "customer"):
-        _t(spark, sf_dir, name).createOrReplaceTempView(f"__ceg_{name}")
+        read_table(spark, sf_dir, name).createOrReplaceTempView(f"__ceg_{name}")
     return spark.sql(
         """
         SELECT o_orderkey, ROUND(o_totalprice, 4) AS total
@@ -130,7 +126,7 @@ def window_ntile_cume(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/quantiles.py): distributed global rank via range
     repartition + partition offsets, same exact answer and oracle."""
     w = Window.orderBy("c_acctbal", "c_custkey")
-    return _t(spark, sf_dir, "customer").select(
+    return read_table(spark, sf_dir, "customer").select(
         "c_custkey",
         F.ntile(4).over(w).cast("long").alias("quartile"),
         F.round(F.cume_dist().over(w), 4).alias("cume"),

@@ -11,10 +11,6 @@ from concurrent_etl_go_spark.operators.registry import query
 from concurrent_etl_go_spark.sources.readers import read_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return read_table(spark, sf_dir, name)
-
-
 @query(
     "agg_string_concat",
     oracle="""
@@ -26,7 +22,7 @@ def agg_string_concat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered string aggregation: collect_list is unordered by contract,
     so sort_array fixes a deterministic order before joining."""
     return (
-        _t(spark, sf_dir, "nation")
+        read_table(spark, sf_dir, "nation")
         .groupBy("n_regionkey")
         .agg(
             F.array_join(F.sort_array(F.collect_list("n_name")), ",").alias(
@@ -58,7 +54,7 @@ def window_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("o_orderdate", "o_orderkey")
         .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     )
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     return orders.select(
         "o_orderkey",
         F.first("o_orderkey").over(w).alias("first_in_status"),
@@ -79,7 +75,7 @@ def window_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
 def filter_rlike(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Regex predicate (rlike) + split_part field extraction."""
     return (
-        _t(spark, sf_dir, "part")
+        read_table(spark, sf_dir, "part")
         .where(F.col("p_name").rlike(r"^[ab].*[xyz]"))
         .select(
             "p_partkey",
@@ -100,7 +96,7 @@ def filter_rlike(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def scalar_date_format(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Timestamp formatting (Java pattern vs strftime — same output)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     return orders.select(
         "o_orderkey",
         F.date_format("o_orderdate", "yyyy-MM").alias("ym"),
@@ -120,11 +116,11 @@ def scalar_date_format(spark: SparkSession, sf_dir: str) -> DataFrame:
 def set_union_missing_cols(spark: SparkSession, sf_dir: str) -> DataFrame:
     """unionByName(allowMissingColumns=True): schema-merging union that
     null-fills the columns each side lacks."""
-    cust = _t(spark, sf_dir, "customer").select(
+    cust = read_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("entity_id"),
         F.col("c_acctbal").alias("balance"),
     )
-    orders = _t(spark, sf_dir, "orders").select(
+    orders = read_table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("entity_id"),
         F.col("o_orderpriority").alias("priority"),
     )

@@ -3,15 +3,11 @@ interval-overlap join."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from concurrent_etl_go_spark.operators.registry import query
 from concurrent_etl_go_spark.sources.readers import read_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return read_table(spark, sf_dir, name)
 
 
 @query(
@@ -35,8 +31,8 @@ def join_asof_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     key, and the per-key merge is cursor-bounded (no pre-rank blow-up)."""
     from concurrent_etl_go_spark.operators.lib import asof_join_merge
 
-    events = _t(spark, sf_dir, "events").select("event_id", "user_id", "ts")
-    orders = _t(spark, sf_dir, "orders").select(
+    events = read_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
+    orders = read_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderkey", "o_orderdate"
     )
     return asof_join_merge(
@@ -64,7 +60,7 @@ def join_asof_left(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_rollup_grouping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP with grouping flags: distinguishes 'NULL because subtotal'
     from 'NULL in the data'."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return li.rollup("l_returnflag", "l_linestatus").agg(
         F.grouping("l_returnflag").cast("int").alias("g_flag"),
         F.grouping("l_linestatus").cast("int").alias("g_status"),
@@ -85,7 +81,7 @@ def agg_rollup_grouping(spark: SparkSession, sf_dir: str) -> DataFrame:
 def scalar_map_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """map_keys/map_values/size over a map column, scalarized for the
     cross-engine hash (the oracle states the equivalent values directly)."""
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_orderkey") % 100 == 0)
+    li = read_table(spark, sf_dir, "lineitem").where(F.col("l_orderkey") % 100 == 0)
     m = F.create_map(
         F.lit("discount"), F.col("l_discount"), F.lit("tax"), F.col("l_tax")
     )
@@ -116,8 +112,8 @@ def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval join: events falling inside each order's 30-day window.
     The equi-key (user = customer) keeps it a hash join; the interval is a
     residual filter — no cartesian blow-up."""
-    orders = _t(spark, sf_dir, "orders")
-    events = _t(spark, sf_dir, "events")
+    orders = read_table(spark, sf_dir, "orders")
+    events = read_table(spark, sf_dir, "events")
     cond = (
         (F.col("user_id") == F.col("o_custkey"))
         & (F.col("ts") >= F.col("o_orderdate"))
@@ -134,7 +130,7 @@ def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sample_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bernoulli sampling with a fixed seed: deterministic within Spark
     (per-partition seeded), not portable to other engines — rows-only."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return li.sample(fraction=0.1, seed=42).select(
         "l_orderkey", "l_linenumber", "l_quantity"
     )
@@ -174,8 +170,8 @@ def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from concurrent_etl_go_spark.operators.lib import asof_join_merge
 
-    events = _t(spark, sf_dir, "events").select("event_id", "user_id", "ts")
-    orders = _t(spark, sf_dir, "orders").select(
+    events = read_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
+    orders = read_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderkey", "o_orderdate"
     )
 

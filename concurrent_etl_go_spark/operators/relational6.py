@@ -10,10 +10,6 @@ from concurrent_etl_go_spark.operators.registry import query
 from concurrent_etl_go_spark.sources.readers import read_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return read_table(spark, sf_dir, name)
-
-
 @query(
     "agg_histogram",
     oracle="""
@@ -25,7 +21,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def agg_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-width histogram via floor-div bucketing (the scalable
     histogram: one pass, no sort)."""
-    events = _t(spark, sf_dir, "events")
+    events = read_table(spark, sf_dir, "events")
     return (
         events.groupBy(
             F.floor(F.col("value") / 50.0).cast("long").alias("bucket")
@@ -51,7 +47,7 @@ def agg_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def window_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    events = _t(spark, sf_dir, "events")
+    events = read_table(spark, sf_dir, "events")
     return events.select(
         "event_id",
         F.lead("event_id").over(w).alias("next_event_id"),
@@ -76,7 +72,7 @@ def window_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def scalar_trig(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_orderkey") % 50 == 0)
+    li = read_table(spark, sf_dir, "lineitem").where(F.col("l_orderkey") % 50 == 0)
     return li.select(
         "l_orderkey",
         "l_linenumber",
@@ -98,7 +94,7 @@ def scalar_trig(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def filter_between(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     return orders.where(
         F.col("o_totalprice").between(100000, 150000)
         & F.col("o_orderdate").between(
@@ -118,7 +114,7 @@ def filter_between(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_keep_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keep-latest survivor policy (vs dedup_exact's keep-smallest):
     argmax on the version key per group."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     return docs.groupBy("source").agg(
         F.max_by("doc_id", "doc_id").alias("latest_doc_id"),
         F.count(F.lit(1)).alias("n"),

@@ -11,10 +11,6 @@ from concurrent_etl_go_spark.operators.registry import query
 from concurrent_etl_go_spark.sources.readers import read_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return read_table(spark, sf_dir, name)
-
-
 @query(
     "scalar_date_arith",
     oracle="""
@@ -31,7 +27,7 @@ def scalar_date_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Date arithmetic. Note dialect traps handled here: Spark
     ``dayofweek`` is 1=Sunday..7 while DuckDB ``dow`` is 0=Sunday..6
     (normalized via -1); datediff argument order differs too."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     return orders.select(
         "o_orderkey",
         F.datediff(
@@ -58,7 +54,7 @@ def scalar_date_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def scalar_string2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _t(spark, sf_dir, "part")
+    part = read_table(spark, sf_dir, "part")
     return part.select(
         "p_partkey",
         F.concat_ws("|", "p_brand", "p_type").alias("brand_type"),
@@ -82,7 +78,7 @@ def scalar_string2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def scalar_null_fns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
+    cust = read_table(spark, sf_dir, "customer")
     return cust.select(
         "c_custkey",
         F.coalesce(
@@ -107,7 +103,7 @@ def scalar_map_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Map column build + dynamic key lookup. The oracle states the
     equivalent value directly — the point is that the map implementation
     computes the same thing."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     metric_map = F.create_map(
         F.lit("qty"), F.col("l_quantity"),
         F.lit("price"), F.col("l_extendedprice"),
@@ -135,7 +131,7 @@ def scalar_map_column(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conditional aggregation (FILTER-clause semantics via when/count_if)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_linestatus").agg(
         F.count_if(F.col("l_discount") > 0.05).alias("n_discounted"),
         lib.exact_money_sum(
@@ -159,7 +155,7 @@ def agg_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def scalar_bitwise(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_orderkey") < 1000)
+    li = read_table(spark, sf_dir, "lineitem").where(F.col("l_orderkey") < 1000)
     return li.select(
         "l_orderkey",
         "l_linenumber",
@@ -186,7 +182,7 @@ def scalar_bitwise(spark: SparkSession, sf_dir: str) -> DataFrame:
 def scalar_array2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array ops (sort/contains/join) — outputs scalarized (array_join) so
     the cross-engine value hash compares strings, not list encodings."""
-    part = _t(spark, sf_dir, "part").withColumn("words", F.split("p_type", " "))
+    part = read_table(spark, sf_dir, "part").withColumn("words", F.split("p_type", " "))
     return part.select(
         "p_partkey",
         F.size("words").cast("long").alias("n_words"),

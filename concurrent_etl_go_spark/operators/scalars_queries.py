@@ -15,10 +15,6 @@ from concurrent_etl_go_spark.operators.registry import query
 from concurrent_etl_go_spark.sources.readers import read_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return read_table(spark, sf_dir, name)
-
-
 @query(
     "scalar_string",
     oracle="""
@@ -35,7 +31,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def scalar_string(spark: SparkSession, sf_dir: str) -> DataFrame:
     """upper/length/substring/split/regexp_extract — S22-style parse with
     the reference's fallback-to-0 on no-match (etl/main.go:361-372)."""
-    return _t(spark, sf_dir, "part").select(
+    return read_table(spark, sf_dir, "part").select(
         "p_partkey",
         F.upper("p_name").alias("name_upper"),
         F.length("p_name").cast("long").alias("name_len"),
@@ -62,7 +58,7 @@ def scalar_string(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def scalar_date(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _t(spark, sf_dir, "orders").select(
+    return read_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.date_trunc("month", "o_orderdate").alias("order_month"),
         F.year("o_orderdate").alias("order_year"),
@@ -84,7 +80,7 @@ def scalar_date(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def scalar_math(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return li.select(
         "l_orderkey",
         "l_linenumber",
@@ -107,7 +103,7 @@ def scalar_math(spark: SparkSession, sf_dir: str) -> DataFrame:
 def scalar_array(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array build + explode + re-aggregate (array fn surface)."""
     return (
-        _t(spark, sf_dir, "part")
+        read_table(spark, sf_dir, "part")
         .select(F.explode(F.split("p_type", " ")).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -130,7 +126,7 @@ def scalar_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     k_null = F.get_json_object("props", "$.k").try_cast("double")
     k_zero = cast_zero_default(F.get_json_object("props", "$.k"))
     return (
-        _t(spark, sf_dir, "events")
+        read_table(spark, sf_dir, "events")
         .groupBy("event_type")
         .agg(
             F.count(k_null).alias("n_with_k"),
@@ -156,7 +152,7 @@ def scalar_case_when(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise("high")
     )
     return (
-        _t(spark, sf_dir, "customer")
+        read_table(spark, sf_dir, "customer")
         .groupBy(bucket.alias("bucket"))
         .agg(
             F.count(F.lit(1)).alias("n"),

@@ -11,24 +11,15 @@ so the scratch roots can be deleted before returning.
 
 from __future__ import annotations
 
-import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from concurrent_etl_go_spark.operators.registry import query, track_cache
+from concurrent_etl_go_spark.operators.registry import checkpoint_and_drop, query
 from concurrent_etl_go_spark.sources import versioned as vt
 from concurrent_etl_go_spark.sources.ivm import refresh_rollup
 from concurrent_etl_go_spark.sources.readers import read_table
-
-
-def _checkpoint_and_drop(df: DataFrame, *tmp_dirs: str) -> DataFrame:
-    out = df.localCheckpoint(eager=True)
-    track_cache(out)
-    for d in tmp_dirs:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
 
 
 @query(
@@ -71,7 +62,7 @@ def ivm_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_events",
         (F.round("total_value", 4) + F.lit(0.0)).alias("total_value"),
     )
-    return _checkpoint_and_drop(out, src, rollup)
+    return checkpoint_and_drop(out, src, rollup)
 
 
 @query(
@@ -114,7 +105,7 @@ def ivm_rollup_after_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_events",
         (F.round("total_value", 4) + F.lit(0.0)).alias("total_value"),
     )
-    return _checkpoint_and_drop(out, src, rollup)
+    return checkpoint_and_drop(out, src, rollup)
 
 
 @query(
@@ -176,4 +167,4 @@ def versioned_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(label).alias("snapshot_label"), "n_rows", "key_sum"
         )
         out = one if out is None else out.unionByName(one)
-    return _checkpoint_and_drop(out, root)
+    return checkpoint_and_drop(out, root)

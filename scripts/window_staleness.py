@@ -21,56 +21,15 @@ Exit 1 if any query's last proof is older than max-age rounds.
 from __future__ import annotations
 
 import argparse
-import glob
 import json
 import os
-import re
 import sys
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO_ROOT not in sys.path:
     sys.path.insert(0, REPO_ROOT)
 
-
-def row_is_green(row: dict) -> bool:
-    """A CORRECTNESS row counts as a driver proof iff the hash matched,
-    or (rows-only by design) there is no oracle, rows are plausible AND
-    hash_match is not explicitly False — a failed hash is a failed
-    proof even when err is clean (ADVICE r13).  Mirrored inline in
-    ``__spark_entry__._last_proof_rounds``."""
-    return bool(row.get("hash_match")) or (
-        row.get("hash_match") is not False
-        and row.get("err") in ("no_oracle", None)
-        and row.get("rows_match") is not False
-        and row.get("spark_rows", -1) >= 0
-    )
-
-
-def last_proof_rounds() -> tuple[dict[str, int], int]:
-    """(query -> last round with a green driver row, latest round)."""
-    last: dict[str, int] = {}
-    latest = 0
-    for path in sorted(glob.glob(os.path.join(REPO_ROOT, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        latest = max(latest, rnd)
-        try:
-            with open(path) as f:
-                data = json.load(f)
-        except Exception:
-            continue
-        if not isinstance(data, dict):
-            continue
-        for name, row in data.items():
-            if not isinstance(row, dict):
-                continue
-            # green = hash proof, or the by-design rows-only check
-            # (no_oracle) that executed with matching/plausible rows
-            if row_is_green(row):
-                last[name] = max(last.get(name, 0), rnd)
-    return last, latest
+from __spark_entry__ import last_proof_rounds  # noqa: E402
 
 
 def main() -> int:

@@ -1,0 +1,100 @@
+"""Degenerate-input contracts for the embedding kernels and the shared
+checkpoint helper.
+
+A registry query on an empty or all-zero ``embeddings`` table must return
+a defined result (the empty schema, or whatever its DuckDB oracle
+yields) instead of crashing in the driver-side fit or power iteration.
+"""
+
+from __future__ import annotations
+
+import os
+
+import duckdb
+import pyarrow as pa
+import pyarrow.parquet as pq
+
+from tests.conftest import SF_SMOKE
+from tests.test_oracle_parity import frames_match
+
+
+def _embeddings_dir(tmp_path, transform) -> str:
+    """A one-table sf dir holding ``transform`` of the sf0.001
+    ``embeddings`` table (schema and footer types preserved)."""
+    table = transform(pq.read_table(os.path.join(SF_SMOKE, "embeddings.parquet")))
+    pq.write_table(table, str(tmp_path / "embeddings.parquet"))
+    return str(tmp_path)
+
+
+def test_ivfpq_topk_on_zero_row_embeddings(spark, tmp_path):
+    from concurrent_etl_go_spark.llm.ivfpq import similarity_ivfpq_topk
+
+    sf_dir = _embeddings_dir(tmp_path, lambda t: t.slice(0, 0))
+    out = similarity_ivfpq_topk(spark, sf_dir)
+    assert out.schema.simpleString() == "struct<vec_id:bigint,sim:double>"
+    assert out.collect() == []
+
+
+def _zeroed(table: pa.Table) -> pa.Table:
+    emb = table.column("embedding")
+    zeros = pa.array(
+        [[0.0] * len(v) for v in emb.to_pylist()], type=emb.type
+    )
+    return table.set_column(
+        table.schema.get_field_index("embedding"), "embedding", zeros
+    )
+
+
+def test_top_component_all_zero_matches_oracle(spark, tmp_path):
+    """All-zero vectors give a zero Gram matrix, so the first rescale
+    divides by max|raw| == 0.  The oracle chain turns that into NULL
+    (HUGEINT % 0 and // 0), and the NULL iterate stays NULL through the
+    remaining rounds: one row per dim, NULL weight."""
+    from concurrent_etl_go_spark.llm.ivfpq2 import _DIM
+    from concurrent_etl_go_spark.llm.pca import (
+        _pca_oracle,
+        embeddings_top_component,
+    )
+
+    sf_dir = _embeddings_dir(tmp_path, _zeroed)
+    got = embeddings_top_component(spark, sf_dir).toPandas()
+    con = duckdb.connect()
+    try:
+        con.execute(
+            f"CREATE VIEW embeddings AS SELECT * FROM "
+            f"'{sf_dir}/embeddings.parquet'"
+        )
+        want = con.execute(_pca_oracle()).df()
+    finally:
+        con.close()
+    assert len(want) == _DIM and want["weight_e6"].isna().all()
+    problems = frames_match(got, want)
+    assert not problems, "; ".join(problems)
+
+
+def test_checkpoint_and_drop_keeps_rows_and_frees_scratch(spark, tmp_path):
+    """Rows survive the checkpoint, every scratch dir is deleted, and the
+    checkpoint blocks are tracked so ``release_caches()`` frees them."""
+    from concurrent_etl_go_spark.operators.registry import (
+        checkpoint_and_drop,
+        release_caches,
+    )
+
+    release_caches()  # clean slate in the shared test session
+    spark.catalog.clearCache()
+    jsc = spark.sparkContext._jsc  # noqa: SLF001
+    assert jsc.getPersistentRDDs().size() == 0
+
+    scratch = [tmp_path / "a", tmp_path / "b"]
+    for d in scratch:
+        d.mkdir()
+        (d / "part-0.parquet").write_bytes(b"x")
+    df = spark.range(10).selectExpr("id", "id * 2 AS twice")
+    expected = sorted(map(tuple, df.collect()))
+
+    out = checkpoint_and_drop(df, *map(str, scratch))
+    assert not any(d.exists() for d in scratch)
+    assert sorted(map(tuple, out.collect())) == expected
+    assert jsc.getPersistentRDDs().size() > 0, "expected checkpoint blocks"
+    release_caches()
+    assert jsc.getPersistentRDDs().size() == 0, "residual blocks after release"

@@ -7,9 +7,10 @@
 3. ``replay_dlq_posts`` sweeps orphan ``.key`` sidecars whose data file
    no longer exists (crash between sidecar write and data write, or
    between data delete and sidecar delete).
-4. ``scripts/window_staleness.row_is_green`` treats an explicit
-   ``hash_match == False`` as NOT green even when err is None and rows
-   match (mirrored inline in ``__spark_entry__._last_proof_rounds``).
+4. ``__spark_entry__.row_is_green`` (the one proof predicate, shared by
+   the driver window and ``scripts/window_staleness.py``) treats an
+   explicit ``hash_match == False`` as NOT green even when err is None
+   and rows match.
 """
 
 from __future__ import annotations
@@ -191,16 +192,7 @@ def test_edge_derivation_fresh_and_deterministic(spark, sf_dir):
 
 
 def test_row_is_green_explicit_hash_false_not_green():
-    import sys
-
-    sys.path.insert(
-        0,
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "scripts",
-        ),
-    )
-    from window_staleness import row_is_green
+    from __spark_entry__ import row_is_green
 
     # a hash mismatch with clean err/rows must NOT count as a proof
     assert not row_is_green(
