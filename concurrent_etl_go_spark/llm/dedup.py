@@ -390,6 +390,7 @@ def connected_components(
     split components — an unconverged label set would over-keep duplicates
     in a 'keep component == doc_id' survivor pass.
     """
+    from concurrent_etl_go_spark.operators.graph import symmetric
     from concurrent_etl_go_spark.operators.registry import (
         release_df,
         track_cache,
@@ -398,9 +399,7 @@ def connected_components(
     edges = pairs.select(
         F.col(pairs.columns[0]).alias("src"), F.col(pairs.columns[1]).alias("dst")
     )
-    sym = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).persist()
+    sym = symmetric(edges).persist()
     # init = round 0's propagation for free: label(v) = min(v, neighbors)
     # in the same aggregation that dedups the node set
     labels = (

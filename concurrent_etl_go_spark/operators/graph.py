@@ -1,11 +1,11 @@
-"""Iterative graph analytics: PageRank over the document near-dup graph.
+"""Iterative graph kernels over an UNDIRECTED edge list ``(src, dst)``.
 
-Third iterative-algorithm shape in the engine (after Lloyd's k-means,
-``llm/kmeans.py``, and pointer-jumping connected components,
-``llm/dedup.py``): a fixed-iteration damped PageRank whose per-round
-plan is one join + one aggregation, with ``localCheckpoint`` truncating
-lineage each round — the same discipline the other loops use, and the
-reason the driver never holds more than a per-round plan. Only scalar
+The shared loop bodies behind the graph queries: damped PageRank,
+bounded-hop BFS, k-core peeling, synchronous label propagation and
+weighted SSSP (connected components lives in ``llm/dedup.py``), plus
+``symmetric``, the one edge symmetrization every graph module uses.
+Each round is one join + one aggregation keyed by node, checkpointed
+per the loop contract in ``registry.checkpoint_round``; only scalar
 convergence telemetry crosses the driver.
 
 Reference parity: generalizes the reference's iterate-until-drained
@@ -19,11 +19,23 @@ from pyspark.sql import functions as F
 
 from concurrent_etl_go_spark.operators.registry import (
     checkpoint_count,
+    checkpoint_round,
     query,
-    release_df,
     track_cache,
 )
 from concurrent_etl_go_spark.sources.readers import read_table
+
+
+def symmetric(edges: DataFrame) -> DataFrame:
+    """``edges`` ``(src, dst, *rest)`` unioned by name with its reverse
+    ``(dst, src, *rest)`` — both directions of every undirected edge,
+    extra columns (e.g. SSSP's ``len``) carried on each."""
+    rest = [c for c in edges.columns if c not in ("src", "dst")]
+    return edges.unionByName(
+        edges.select(
+            F.col("dst").alias("src"), F.col("src").alias("dst"), *rest
+        )
+    )
 
 
 def pagerank(
@@ -40,15 +52,12 @@ def pagerank(
     join/agg shape to connected components — linear per round, O(rounds)
     total, no driver materialization.
     """
-    sym = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    sym = symmetric(edges)
     deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg")).persist()
     track_cache(deg)
 
     ranks = deg.select(F.col("src").alias("id"), F.lit(1.0).alias("rank"))
-    storage = None
-    for _ in range(iterations):
+    for k in range(iterations):
         contrib = (
             sym.join(deg, "src")
             .join(ranks, sym["src"] == ranks["id"])
@@ -59,18 +68,14 @@ def pagerank(
             .groupBy("id")
             .agg(F.sum("c").alias("inflow"))
         )
-        new_ranks = contrib.select(
-            "id",
-            (F.lit(1.0 - damping) + F.lit(damping) * F.col("inflow")).alias(
-                "rank"
+        ranks = checkpoint_round(
+            contrib.select(
+                "id",
+                (F.lit(1.0 - damping) + F.lit(damping) * F.col("inflow"))
+                .alias("rank"),
             ),
-        ).localCheckpoint(eager=True)
-        if storage is not None:
-            release_df(storage)
-        storage = new_ranks
-        ranks = new_ranks
-    if storage is not None:
-        track_cache(storage)
+            ranks if k else None,
+        )
     # rounded for display; rank mass (pre-round) sums to n_nodes
     return ranks.select("id", F.round("rank", 4).alias("rank"))
 
@@ -101,13 +106,10 @@ def bfs_hops(edges: DataFrame, source: int, max_hops: int = 6) -> DataFrame:
     round the shuffle is O(frontier x avg-degree), not O(nodes): on a
     100 TB graph the early rounds move tiny frontiers and the loop never
     re-touches settled nodes, unlike a min-fold over the full distance
-    table.  ``localCheckpoint`` truncates lineage per round (the
-    PageRank/components discipline); the loop stops early when a round
-    adds nothing, so ``max_hops`` is a ceiling, not a fixed cost.
+    table.  The loop stops early when a round adds nothing, so
+    ``max_hops`` is a ceiling, not a fixed cost.
     """
-    sym = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    sym = symmetric(edges)
     spark = edges.sparkSession
     dist = spark.createDataFrame([(source, 0)], "id long, dist long")
     frontier = dist
@@ -147,26 +149,22 @@ def kcore_peel(
     state the identical computation; when the peel converges within the
     budget the result IS the k-core (pytest-pinned).  Per round: one
     degree hash-agg + two semi-joins on the node key — linear in the
-    surviving edges — with ``localCheckpoint`` truncating lineage (the
-    PageRank/BFS loop discipline).
+    surviving edges.
     """
-    sym = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    sym = symmetric(edges)
     cur = sym
-    for _ in range(rounds):
+    for k in range(rounds):
         keep = (
             cur.groupBy("src")
             .agg(F.count(F.lit(1)).alias("deg"))
             .where(F.col("deg") >= min_degree)
             .select(F.col("src").alias("id"))
         )
-        cur = (
+        cur = checkpoint_round(
             cur.join(keep, cur["src"] == keep["id"], "left_semi")
-            .join(keep, cur["dst"] == keep["id"], "left_semi")
-            .localCheckpoint(eager=True)
+            .join(keep, cur["dst"] == keep["id"], "left_semi"),
+            cur if k else None,
         )
-        track_cache(cur)
     return cur.groupBy(F.col("src").alias("id")).agg(
         F.count(F.lit(1)).alias("degree")
     )
@@ -188,34 +186,29 @@ def label_propagation(edges: DataFrame, rounds: int = 4) -> DataFrame:
 
     Scale: per round, one shuffle of (neighbor, label) pairs keyed by
     node — O(edges) — then two hash-aggs ((id, lbl) counts, per-id
-    argmax); ``localCheckpoint`` truncates lineage (the loop discipline
-    shared by PageRank/BFS/SSSP/components).
+    argmax).
     """
-    sym = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    sym = symmetric(edges)
     labels = (
         sym.select(F.col("src").alias("id"))
         .distinct()
         .withColumn("lbl", F.col("id"))
     )
-    for _ in range(rounds):
+    for k in range(rounds):
         cnt = (
             sym.join(labels, sym["src"] == labels["id"])
             .select(F.col("dst").alias("nid"), "lbl")
             .groupBy("nid", "lbl")
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        labels = (
-            cnt.groupBy(F.col("nid").alias("id"))
-            .agg(
+        labels = checkpoint_round(
+            cnt.groupBy(F.col("nid").alias("id")).agg(
                 F.min_by(
                     "lbl", F.struct((-F.col("c")).alias("nc"), F.col("lbl"))
                 ).alias("lbl")
-            )
-            .localCheckpoint(eager=True)
+            ),
+            labels if k else None,
         )
-        track_cache(labels)
     return labels.select("id", F.col("lbl").alias("label"))
 
 
@@ -237,14 +230,8 @@ def sssp_weighted(
     After round k the table equals the min over <= k-edge paths on any
     engine, which is what the unrolled SQL oracle states; early exit
     when nothing improves makes ``rounds`` a ceiling, not a fixed cost.
-    ``localCheckpoint`` truncates lineage per round (the
-    PageRank/components/BFS loop discipline).
     """
-    sym = edges.union(
-        edges.select(
-            F.col("dst").alias("src"), F.col("src").alias("dst"), "len"
-        )
-    )
+    sym = symmetric(edges)
     spark = edges.sparkSession
     dist = spark.createDataFrame([(source, 0)], "id long, dist long")
     frontier = dist

@@ -30,12 +30,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from concurrent_etl_go_spark.operators.graph import symmetric
 from concurrent_etl_go_spark.operators.lib import parallelize_narrow_scan
 from concurrent_etl_go_spark.operators.registry import (
+    checkpoint_round,
     query,
-    release_df,
     scoped_persist,
-    track_cache,
 )
 from concurrent_etl_go_spark.sources.readers import read_table
 
@@ -402,9 +402,7 @@ def graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     symmetrization is needed on the probe side).  Top-20 via
     TakeOrdered, never a global sort."""
     e = _copurchase_edges(spark, sf_dir)
-    sym = e.unionByName(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    sym = symmetric(e)
     s1, s2 = sym.alias("s1"), sym.alias("s2")
     cn = (
         s1.join(
@@ -469,9 +467,7 @@ def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate pairs (node-keyed shuffles, both sides already hash-
     partitioned); top-20 via TakeOrdered, never a global sort."""
     e = _copurchase_edges(spark, sf_dir)
-    sym = e.unionByName(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    sym = symmetric(e)
     deg = sym.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("degree")
     )
@@ -559,7 +555,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal to the fixpoint, and ``tests/test_llm_ops.py`` pins
     convergence).  Engine rounds run ``operators/graph.py::kcore_peel``
     — one degree hash-agg + two semi-joins on the node key, linear per
-    round, localCheckpoint lineage discipline."""
+    round."""
     from concurrent_etl_go_spark.operators.graph import kcore_peel
 
     e = _copurchase_edges(spark, sf_dir)
@@ -659,12 +655,12 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     The engine runs ``operators/graph.py::sssp_weighted`` — delta
     relaxation: each round relaxes only edges out of nodes whose
     distance improved, merges by min-fold, early-exits when nothing
-    improves.  O(frontier x degree) per round, localCheckpoint lineage
-    discipline; all-integer ids, lengths, and distances, so the driver
-    hash is bit-exact with no float discipline.  The oracle evaluates
-    the identical recurrence as an unrolled min-fold chain; the source
-    is MIN(src) of the edge list, derived identically by both engines
-    (the ``graph_bfs_hops`` convention).
+    improves.  O(frontier x degree) per round; all-integer ids,
+    lengths, and distances, so the driver hash is bit-exact with no
+    float discipline.  The oracle evaluates the identical recurrence as
+    an unrolled min-fold chain; the source is MIN(src) of the edge
+    list, derived identically by both engines (the ``graph_bfs_hops``
+    convention).
 
     The _EDGE_SQL CTE is carried (unused) so the oracle shares the
     registry's single edge-derivation fragment verbatim; wedges
@@ -734,11 +730,11 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The engine runs ``operators/graph.py::label_propagation`` — per
     round one edge-keyed shuffle + two hash-aggs, min_by((-count,
-    label)) for the deterministic (max frequency, min label) winner,
-    localCheckpoint discipline.  The oracle evaluates the identical
-    synchronous recurrence unrolled; all-integer ids/labels/counts, so
-    the driver hash is bit-exact.  Every node has >= 1 neighbor by
-    edge-list construction, so each round relabels every node."""
+    label)) for the deterministic (max frequency, min label) winner.
+    The oracle evaluates the identical synchronous recurrence unrolled;
+    all-integer ids/labels/counts, so the driver hash is bit-exact.
+    Every node has >= 1 neighbor by edge-list construction, so each
+    round relabels every node."""
     from concurrent_etl_go_spark.operators.graph import label_propagation
 
     e = _copurchase_edges(spark, sf_dir)
@@ -815,14 +811,10 @@ def graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: identical per-round shape to ``graph_pagerank_copurchase``
     (one rank/deg shuffle keyed by node + a left join against the
-    static node table), localCheckpoint lineage discipline; the source
-    is MIN(src), derived identically by both engines."""
-    from concurrent_etl_go_spark.operators.registry import release_df
-
+    static node table); the source is MIN(src), derived identically by
+    both engines."""
     edges = _copurchase_edges(spark, sf_dir)
-    sym = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    sym = symmetric(edges)
     deg = sym.groupBy(F.col("src").alias("id")).agg(
         F.count(F.lit(1)).alias("n_deg")
     )
@@ -831,8 +823,7 @@ def graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     source = sym.agg(F.min("src")).first()[0]
     is_src = F.when(F.col("id") == source, 1.0).otherwise(0.0)
     ranks = nodes.select("id", is_src.alias("rank"))
-    storage = None
-    for _ in range(_PPR_ROUNDS):
+    for k in range(_PPR_ROUNDS):
         inflow = (
             sym.join(deg, sym["src"] == deg["id"])
             .join(
@@ -848,24 +839,17 @@ def graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("id")
             .agg(F.sum("c").alias("inflow"))
         )
-        new_ranks = (
-            nodes.join(inflow, "id", "left")
-            .select(
+        ranks = checkpoint_round(
+            nodes.join(inflow, "id", "left").select(
                 "id",
                 (
                     F.lit(1 - _PPR_DAMPING) * is_src
                     + F.lit(_PPR_DAMPING)
                     * F.coalesce(F.col("inflow"), F.lit(0.0))
                 ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            ranks if k else None,
         )
-        if storage is not None:
-            release_df(storage)
-        storage = new_ranks
-        ranks = new_ranks
-    if storage is not None:
-        track_cache(storage)
     return ranks.select(
         "id", (F.round("rank", 6) + F.lit(0.0)).alias("rank")
     )
@@ -939,8 +923,8 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: each half-round is ONE edge-keyed equi-join + one hash-agg
     on the opposite endpoint (identical shape to the PageRank inflow
-    round, map-side combinable); localCheckpoint after each round
-    keeps lineage flat; top-20 via TakeOrdered, never a global sort."""
+    round, map-side combinable); top-20 via TakeOrdered, never a global
+    sort."""
     e = _copurchase_edges(spark, sf_dir)
     nodes = scoped_persist(
         e.select(F.col("src").alias("id"))
@@ -949,19 +933,19 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = nodes.select("id", F.lit(1).cast("long").alias("a"))
     h = None
-    for _ in range(_HITS_ROUNDS):
-        h = (
+    for k in range(_HITS_ROUNDS):
+        h = checkpoint_round(
             e.join(a, e["dst"] == a["id"])
             .groupBy(e["src"].alias("id"))
-            .agg(F.sum("a").alias("h"))
-            .localCheckpoint(eager=True)
+            .agg(F.sum("a").alias("h")),
+            h,
         )
-        a = (
+        a = checkpoint_round(
             e.join(h.select(F.col("id").alias("hid"), "h"),
                    e["src"] == F.col("hid"))
             .groupBy(e["dst"].alias("id"))
-            .agg(F.sum("h").alias("a"))
-            .localCheckpoint(eager=True)
+            .agg(F.sum("h").alias("a")),
+            a if k else None,
         )
     out = (
         nodes.join(h.select(F.col("id").alias("id"), "h"), "id", "left")

@@ -18,10 +18,9 @@ metrics are pure integers:
 
 Scale: the multi-source frontier loop shuffles O(|S| x frontier x
 degree) per round keyed by node — |S| bounded BFS runs share each
-round's single join + anti-join + min-fold (one job, not |S| jobs);
-``localCheckpoint`` truncates lineage per round (the shared loop
-discipline).  The oracle unrolls the min-fold recurrence per round
-(``graph_bfs_hops`` convention, every step ``AS MATERIALIZED``).
+round's single join + anti-join + min-fold (one job, not |S| jobs).
+The oracle unrolls the min-fold recurrence per round (``graph_bfs_hops``
+convention, every step ``AS MATERIALIZED``).
 
 Reference parity: no graph surface exists in the reference
 (etl/main.go); extends SURVEY.md §2.B's graph family (VERDICT r8
@@ -33,14 +32,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from concurrent_etl_go_spark.operators.graph import symmetric
 from concurrent_etl_go_spark.operators.graph2 import (
     _EDGE_SQL,
     _copurchase_edges,
 )
 from concurrent_etl_go_spark.operators.registry import (
     checkpoint_count,
+    checkpoint_round,
     query,
-    track_cache,
 )
 
 _CC_SOURCES = 5
@@ -59,13 +59,14 @@ def multi_source_bfs(
     one join + one anti-join per round — a single distributed job per
     hop instead of |S| sequential single-source runs.  Early exit when
     every search's frontier drains."""
-    sym = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    sym = symmetric(edges)
+    dist = checkpoint_round(
+        sources.select(
+            "sid",
+            F.col("sid").alias("id"),
+            F.lit(0).cast("long").alias("dist"),
+        )
     )
-    dist = sources.select(
-        "sid", F.col("sid").alias("id"), F.lit(0).cast("long").alias("dist")
-    ).localCheckpoint(eager=True)
-    track_cache(dist)
     frontier = dist
     for k in range(1, max_hops + 1):
         # one job per round: the frontier count doubles as the emptiness
@@ -286,47 +287,41 @@ def graph_betweenness_sampled(
     Scale: forward rounds shuffle O(frontier x degree) keyed by node
     (one job for all sources — the ``multi_source_bfs`` argument);
     backward rounds join each level to its successor level along
-    edges, the same O(level-size x degree) bound in reverse;
-    ``localCheckpoint`` truncates lineage per round in BOTH sweeps."""
+    edges, the same O(level-size x degree) bound in reverse.  Every
+    level and delta round stays checkpointed until release: the
+    backward sweep reads all of them."""
     edges = _copurchase_edges(spark, sf_dir)
-    sym = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    sym = symmetric(edges)
     sym_nodes = (
         edges.select(F.col("src").alias("sid"))
         .unionAll(edges.select(F.col("dst").alias("sid")))
         .distinct()
     )
     sources = sym_nodes.orderBy("sid").limit(_BC_SOURCES)
-    lvl = (
+    lvl = checkpoint_round(
         sources.select(
             "sid",
             F.col("sid").alias("id"),
             F.lit(1).cast("long").alias("sigma"),
         )
-        .localCheckpoint(eager=True)
     )
-    track_cache(lvl)
     levels = [lvl]
     settled = lvl.select("sid", "id")
     for _ in range(1, _BC_HOPS + 1):
-        nxt = (
+        nxt = checkpoint_round(
             levels[-1].join(sym, levels[-1]["id"] == sym["src"])
             .select("sid", F.col("dst").alias("id"), "sigma")
             .groupBy("sid", "id")
             .agg(F.sum("sigma").cast("long").alias("sigma"))
             .join(settled, ["sid", "id"], "left_anti")
-            .localCheckpoint(eager=True)
         )
-        track_cache(nxt)
         levels.append(nxt)
         settled = settled.unionByName(nxt.select("sid", "id"))
     deltas = [
-        levels[_BC_HOPS].select(
-            "sid", "id", F.lit(0.0).alias("delta")
-        ).localCheckpoint(eager=True)
+        checkpoint_round(
+            levels[_BC_HOPS].select("sid", "id", F.lit(0.0).alias("delta"))
+        )
     ]
-    track_cache(deltas[0])
     d_next = deltas[0]
     for k in range(_BC_HOPS - 1, 0, -1):
         v = levels[k]
@@ -355,7 +350,7 @@ def graph_betweenness_sampled(
             .groupBy("sid", "id")
             .agg(F.sum("c").alias("contrib"))
         )
-        d_k = (
+        d_k = checkpoint_round(
             v.select("sid", "id")
             .join(contrib, ["sid", "id"], "left")
             .select(
@@ -363,9 +358,7 @@ def graph_betweenness_sampled(
                 "id",
                 F.coalesce(F.col("contrib"), F.lit(0.0)).alias("delta"),
             )
-            .localCheckpoint(eager=True)
         )
-        track_cache(d_k)
         deltas.append(d_k)
         d_next = d_k
     alldeltas = deltas[0]
@@ -428,9 +421,7 @@ def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``graph_triangles_copurchase`` argument) plus one degree hash-agg;
     the division is a per-node scalar on the joined dimension table."""
     edges = _copurchase_edges(spark, sf_dir)
-    sym = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    sym = symmetric(edges)
     deg = sym.groupBy(F.col("src").alias("id")).agg(
         F.count(F.lit(1)).cast("long").alias("degree")
     )

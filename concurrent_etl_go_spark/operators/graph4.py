@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from concurrent_etl_go_spark.operators.graph import symmetric
 from concurrent_etl_go_spark.operators.graph2 import (
     _EDGE_SQL,
     _copurchase_edges,
@@ -98,9 +99,7 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     6-accumulator global fold.  No window, no sort; driver traffic is
     one row."""
     edges = _copurchase_edges(spark, sf_dir)
-    sym = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    sym = symmetric(edges)
     deg = sym.groupBy(F.col("src").alias("id")).agg(
         F.count(F.lit(1)).alias("degree")
     )
@@ -184,9 +183,7 @@ def graph_two_hop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     count — the ``graph_common_neighbors`` shuffle shape.  No global
     materialization of anything wider than the pair list."""
     edges = _copurchase_edges(spark, sf_dir)
-    sym = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    sym = symmetric(edges)
     a = sym.select(F.col("src").alias("id"), F.col("dst").alias("mid"))
     b = sym.select(F.col("src").alias("mid"), F.col("dst").alias("nb"))
     two = (
@@ -265,9 +262,7 @@ def graph_transitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     is one row."""
     big = "DECIMAL(38,0)"
     e = _copurchase_edges(spark, sf_dir)
-    sym = e.select("src", "dst").union(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    sym = symmetric(e)
     deg = sym.groupBy(F.col("src").alias("id")).agg(
         F.count(F.lit(1)).cast("long").alias("d")
     )
@@ -351,9 +346,7 @@ def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
     node-keyed semi-join filters per threshold; output |ks| rows."""
     big = "DECIMAL(38,0)"
     e = scoped_persist(_copurchase_edges(spark, sf_dir))
-    sym = e.select("src", "dst").union(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    sym = symmetric(e)
     deg = scoped_persist(
         sym.groupBy(F.col("src").alias("id")).agg(
             F.count(F.lit(1)).cast("long").alias("d")

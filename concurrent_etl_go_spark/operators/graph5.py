@@ -15,8 +15,7 @@ per-round floor both engines execute identically — the hash-proven
 Scale: all three ride the ``_GROUP_CAP``-bounded edge list; the wedge
 joins fan out by Sum(deg^2) exactly like triangles/common-neighbors;
 Katz shuffles (node, value) pairs per round — linear per round,
-O(rounds) total, eager-localCheckpoint discipline (lazy chains
-recompute O(k^2)).  Reference parity: no graph surface exists in the
+O(rounds) total.  Reference parity: no graph surface exists in the
 reference (etl/main.go); extends SURVEY.md §2.B.
 """
 
@@ -25,13 +24,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from concurrent_etl_go_spark.operators.graph import symmetric
 from concurrent_etl_go_spark.operators.graph2 import (
     _EDGE_SQL,
     _copurchase_edges,
 )
 from concurrent_etl_go_spark.operators.registry import (
+    checkpoint_round,
     query,
-    release_df,
 )
 
 #: Katz constants: attenuation 1/20 (well under 1/lambda_max for the
@@ -81,9 +81,7 @@ def graph_resource_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``graph_common_neighbors`` with the middle node's degree joined in
     (node-keyed broadcast-sized table); top-20 via TakeOrdered."""
     e = _copurchase_edges(spark, sf_dir)
-    sym = e.unionByName(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    sym = symmetric(e)
     deg = sym.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).cast("long").alias("degree")
     )
@@ -147,9 +145,7 @@ def graph_edge_embeddedness(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one wedge join (Sum(deg^2), _GROUP_CAP-bounded) + one left
     join back to the edge list + a bounded-key histogram agg."""
     e = _copurchase_edges(spark, sf_dir)
-    sym = e.unionByName(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    sym = symmetric(e)
     s1, s2 = sym.alias("s1"), sym.alias("s2")
     cn = (
         s1.join(
@@ -212,35 +208,31 @@ def graph_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     HITS/PageRank-copurchase convention).  Top-20 hubs emitted.
 
     Scale: per round, one (node, value) equi-join + node-keyed hash
-    agg — linear in edges per round, O(rounds) total; eager
-    localCheckpoint per round (lazy chains recompute O(k^2)).  Integer
+    agg — linear in edges per round, O(rounds) total.  Integer
     envelope: scores grow ~(deg_max/20)^rounds; with the capped
     neighborhood degrees (<= ~1e3 observed) three rounds stay far
     inside int64 — beyond that, widen the sum to DECIMAL(38,0) before
     the floor, same algebra."""
     e = _copurchase_edges(spark, sf_dir)
-    sym = e.unionByName(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    sym = symmetric(e)
     nodes = sym.select(F.col("src").alias("id")).distinct()
     x = nodes.select("id", F.lit(1_000_000).cast("long").alias("katz"))
-    storage = None
-    for _ in range(_KATZ_ROUNDS):
+    for k in range(_KATZ_ROUNDS):
         inflow = (
             sym.join(x, sym["src"] == x["id"])
             .groupBy(F.col("dst").alias("id"))
             .agg(F.sum("katz").alias("s"))
         )
-        x = nodes.join(inflow, "id", "left").select(
-            "id",
-            F.expr(
-                f"CAST(1000000 + COALESCE(s, 0) div {_KATZ_DIV}"
-                f" AS BIGINT)"
-            ).alias("katz"),
-        ).localCheckpoint(eager=True)
-        if storage is not None:
-            release_df(storage)
-        storage = x
+        x = checkpoint_round(
+            nodes.join(inflow, "id", "left").select(
+                "id",
+                F.expr(
+                    f"CAST(1000000 + COALESCE(s, 0) div {_KATZ_DIV}"
+                    f" AS BIGINT)"
+                ).alias("katz"),
+            ),
+            x if k else None,
+        )
     return x.select("id", F.col("katz").alias("katz_e6")).orderBy(
         F.desc("katz_e6"), "id"
     ).limit(20)

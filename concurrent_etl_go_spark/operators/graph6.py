@@ -31,7 +31,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from concurrent_etl_go_spark.operators.graph import label_propagation
+from concurrent_etl_go_spark.operators.graph import (
+    label_propagation,
+    symmetric,
+)
 from concurrent_etl_go_spark.operators.graph2 import (
     _LPA_ROUNDS,
     _copurchase_edges,
@@ -87,13 +90,7 @@ def graph_modularity_labels(
     Scale: LPA's per-round edge shuffles dominate; everything here is
     one labels join per edge side + label-keyed hash aggs."""
     e = _copurchase_edges(spark, sf_dir)
-    sym = scoped_persist(
-        e.select("src", "dst").union(
-            e.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
-            )
-        )
-    )
+    sym = scoped_persist(symmetric(e))
     lab = scoped_persist(
         label_propagation(e.select("src", "dst"), _LPA_ROUNDS)
     )

@@ -119,6 +119,42 @@ def track_cache(df: DataFrame) -> DataFrame:
     return df
 
 
+def checkpoint_round(
+    df: DataFrame, prev: DataFrame | None = None
+) -> DataFrame:
+    """One round of an iterative kernel: eagerly localCheckpoint ``df``,
+    track the result for ``release_caches()``, then free ``prev``.
+
+    The loop contract every graph/search kernel follows:
+
+    - **Eager materialization.** The checkpoint runs its job here, so
+      the round's plan starts from a LogicalRDD — lineage stays one
+      round deep instead of re-embedding every earlier round (lazy
+      chains recompute O(k^2) and blow up the driver's plan analysis).
+    - **Tracking.** Every checkpoint is tracked, so a query that
+      returns a lazy frame over the last round still frees its blocks
+      in ``release_caches()`` after the caller's terminal action.
+    - **Freeing the superseded round.** ``prev`` — the previous round's
+      checkpoint, which the new round was computed from — is released
+      once the new round is materialized, so a fixed-round loop holds
+      one round of blocks, not all of them.  Loops that read every
+      round afterwards (betweenness levels, MMR picks) pass no ``prev``.
+
+    Loops whose round already runs an action fuse the checkpoint into
+    it instead, at one job per round: the BFS/SSSP frontiers use
+    ``checkpoint_count`` (the count is the emptiness probe),
+    ``sssp_weighted`` marks its distance merge lazily for the next
+    round's probe to materialize, and ``connected_components`` marks
+    its labels lazily for the label-sum fixpoint probe.  An eager
+    checkpoint there would add a second job per round."""
+    out = df.localCheckpoint(eager=True)
+    _SCOPED_CACHES.append(out)
+    if prev is not None:
+        release_df(prev)
+        _SCOPED_CACHES[:] = [d for d in _SCOPED_CACHES if d is not prev]
+    return out
+
+
 def checkpoint_count(df: DataFrame) -> tuple[DataFrame, int]:
     """Materialize ``df`` as a localCheckpoint AND return its row count in
     ONE driver-coordinated job: the checkpoint is marked lazily
@@ -140,8 +176,7 @@ def checkpoint_and_drop(df: DataFrame, *tmp_dirs: str) -> DataFrame:
     """Materialize the (small) result into block storage so the scratch
     table files it was read from can be deleted immediately; the blocks
     are registered for ``release_caches()``."""
-    out = df.localCheckpoint(eager=True)
-    _SCOPED_CACHES.append(out)
+    out = checkpoint_round(df)
     for d in tmp_dirs:
         shutil.rmtree(d, ignore_errors=True)
     return out

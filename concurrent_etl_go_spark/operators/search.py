@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from concurrent_etl_go_spark.operators.registry import query
+from concurrent_etl_go_spark.operators.registry import checkpoint_round, query
 from concurrent_etl_go_spark.llm.text import tokens
 from concurrent_etl_go_spark.sources.readers import read_table
 
@@ -493,12 +493,12 @@ def search_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             "a", "b", pdist.alias("pd")
         )
     )
-    # Eager localCheckpoint per pick (the iterative-loop discipline):
-    # each greedy round otherwise re-embeds every prior round's plan
-    # through the growing `selected` union — a 2^k lineage blowup the
-    # audit showed as hundreds of phantom join nodes.  The picks are
-    # one-row frames, so materializing them is free.
-    pick = (
+    # One checkpoint per pick: each greedy round otherwise re-embeds
+    # every prior round's plan through the growing `selected` union — a
+    # 2^k lineage blowup the audit showed as hundreds of phantom join
+    # nodes.  The picks are one-row frames, so materializing them is
+    # free; every pick stays until release (the output unions them all).
+    pick = checkpoint_round(
         short.orderBy("d2", "doc_id")
         .limit(1)
         .select(
@@ -507,7 +507,6 @@ def search_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             "d2",
             F.lit(None).cast("long").alias("mmr"),
         )
-        .localCheckpoint(eager=True)
     )
     picks = [pick]
     selected = pick.select("doc_id")
@@ -529,7 +528,7 @@ def search_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("novelty") - F.col("d2")).alias("mmr"),
             )
         )
-        nxt = (
+        nxt = checkpoint_round(
             scored.orderBy(F.desc("mmr"), "doc_id")
             .limit(1)
             .select(
@@ -538,7 +537,6 @@ def search_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "d2",
                 F.col("mmr").cast("long").alias("mmr"),
             )
-            .localCheckpoint(eager=True)
         )
         picks.append(nxt)
         selected = selected.unionByName(nxt.select("doc_id"))

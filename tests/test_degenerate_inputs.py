@@ -1,5 +1,5 @@
-"""Degenerate-input contracts for the embedding kernels and the shared
-checkpoint helper.
+"""Degenerate-input contracts for the embedding kernels, and the shared
+checkpoint and edge-symmetrization helpers.
 
 A registry query on an empty or all-zero ``embeddings`` table must return
 a defined result (the empty schema, or whatever its DuckDB oracle
@@ -98,3 +98,52 @@ def test_checkpoint_and_drop_keeps_rows_and_frees_scratch(spark, tmp_path):
     assert jsc.getPersistentRDDs().size() > 0, "expected checkpoint blocks"
     release_caches()
     assert jsc.getPersistentRDDs().size() == 0, "residual blocks after release"
+
+
+def test_checkpoint_round_frees_superseded_rounds(spark):
+    """Chained rounds: with ``prev`` only the newest round stays persisted;
+    without it every round stays until ``release_caches()``.  Rows are
+    unchanged either way."""
+    from concurrent_etl_go_spark.operators.registry import (
+        checkpoint_round,
+        release_caches,
+    )
+
+    release_caches()  # clean slate in the shared test session
+    spark.catalog.clearCache()
+    jsc = spark.sparkContext._jsc  # noqa: SLF001
+    assert jsc.getPersistentRDDs().size() == 0
+
+    base = spark.range(5).selectExpr("id", "id AS v")
+    expected = [(i, i + 3) for i in range(5)]
+
+    cur = base
+    for k in range(3):
+        cur = checkpoint_round(
+            cur.selectExpr("id", "v + 1 AS v"), cur if k else None
+        )
+        assert jsc.getPersistentRDDs().size() == 1, f"round {k}"
+    assert sorted(map(tuple, cur.collect())) == expected
+    release_caches()
+    assert jsc.getPersistentRDDs().size() == 0
+
+    cur = base
+    for k in range(3):
+        cur = checkpoint_round(cur.selectExpr("id", "v + 1 AS v"))
+        assert jsc.getPersistentRDDs().size() == k + 1
+    assert sorted(map(tuple, cur.collect())) == expected
+    release_caches()
+    assert jsc.getPersistentRDDs().size() == 0, "residual blocks after release"
+
+
+def test_symmetric_returns_both_directions_with_extra_columns(spark):
+    from concurrent_etl_go_spark.operators.graph import symmetric
+
+    edges = spark.createDataFrame(
+        [(1, 2, 5), (2, 3, 7)], "src long, dst long, len long"
+    )
+    sym = symmetric(edges)
+    assert sym.columns == ["src", "dst", "len"]
+    assert sorted(map(tuple, sym.collect())) == [
+        (1, 2, 5), (2, 1, 5), (2, 3, 7), (3, 2, 7)
+    ]

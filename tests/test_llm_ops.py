@@ -429,6 +429,10 @@ def test_queries_release_scoped_caches(spark):
         "similarity_kmeans",
         "dedup_components",
         "similarity_rp_lsh",
+        "graph_hits",
+        "graph_katz_centrality",
+        "search_mmr_rerank",
+        "graph_kcore",
     ):
         qs[name](spark, SF_SMOKE).write.format("noop").mode("overwrite").save()
         assert jsc.getPersistentRDDs().size() > 0, f"{name}: expected caches"

@@ -4,11 +4,13 @@ columns by name before hashing), and a stable schema across calls."""
 
 from __future__ import annotations
 
+import pathlib
 import re
 
 import pytest
 
 import __spark_entry__ as entry_mod
+import concurrent_etl_go_spark
 
 ALL = sorted(entry_mod.queries())
 
@@ -38,6 +40,21 @@ def test_oracles_are_subset_of_queries():
         "agg_theta_churn",
         "agg_approx_topk",
     }
+
+
+def test_eager_checkpoints_only_in_registry():
+    """Every eager localCheckpoint goes through
+    ``registry.checkpoint_round``, which tracks it for
+    ``release_caches()``; a hand-written one leaks its blocks into a
+    long-lived session."""
+    pkg = pathlib.Path(concurrent_etl_go_spark.__file__).parent
+    eager = re.compile(r"localCheckpoint\(\s*(eager\s*=\s*)?True")
+    hits = [
+        p.relative_to(pkg).as_posix()
+        for p in sorted(pkg.rglob("*.py"))
+        if eager.search(p.read_text())
+    ]
+    assert hits == ["operators/registry.py"]
 
 
 @pytest.mark.parametrize("name", ALL)
