@@ -23,7 +23,11 @@ from concurrent_etl_go_spark.operators.extract import (
     run_extract,
     synthetic_fetch,
 )
-from concurrent_etl_go_spark.plans.etl_pipeline import LOAD_WORKERS, device_pipeline
+from concurrent_etl_go_spark.plans.etl_pipeline import (
+    LOAD_WORKERS,
+    device_pipeline,
+    transform_cpu_stats,
+)
 from concurrent_etl_go_spark.session import get_spark
 from concurrent_etl_go_spark.sinks import (
     HttpSinkConfig,
@@ -48,7 +52,12 @@ class RunReport:
 
     The reference logs CPU count, goroutine count, heap stats and total
     wall-clock (etl/main.go:466-485,159); the engine reports the Spark
-    equivalents plus pipeline counters.
+    equivalents plus counters: ``delivered_rows`` POSTed with a 2xx and
+    ``spilled_rows`` written to the DLQ, from the sink's task results (one
+    per partition); ``extracted_rows`` = delivered + spilled - replayed;
+    ``quarantined_rows`` from an accumulator, which an extract stage that
+    Spark recomputes after a fault adds to again. ``phases``: replay count,
+    lazy plan (no job) and ``load_s``, the sink action from extract to POST.
     """
 
     default_parallelism: int = 0
@@ -56,6 +65,7 @@ class RunReport:
     extracted_rows: int = 0
     quarantined_rows: int = 0
     delivered_rows: int = 0
+    spilled_rows: int = 0
     spill_files_before: int = 0
     spill_files_after: int = 0
     wall_clock_s: float = 0.0
@@ -86,7 +96,8 @@ def run_etl(
        load then PIPELINE within each task (the reference's channel overlap;
        a repartition would barrier the whole extract before the first POST).
        Use explicit lanes only when batch-packing efficiency needs it.
-    5. Micro-batched HTTP load with DLQ spill on failure (S14-S19).
+    5. Micro-batched HTTP load with DLQ spill on failure (S14-S19); steps
+       2-5 run inside this one sink action, timed as ``load_s``.
     6. DLQ files that were replayed are deleted only after the sink pass
        completes (stronger than the reference's delete-after-enqueue).
     """
@@ -95,47 +106,43 @@ def run_etl(
 
     t0 = time.perf_counter()
     replayed_files = dlq_files(sink.dlq_dir)
-    replayed = read_dlq(spark, sink.dlq_dir, schemas.DEVICE_DATA)
     report.spill_files_before = len(replayed_files)
-    # don't spend a Spark job counting an empty DLQ
-    report.replayed_rows = replayed.count() if replayed_files else 0
+    replayed = None
+    # don't spend a Spark job on an empty DLQ, nor the union node (plan/
+    # codegen cost on the latency-critical load job) for a zero-row side
+    if replayed_files:
+        replayed = read_dlq(spark, replayed_files, schemas.DEVICE_DATA)
+        report.replayed_rows = replayed.count()
     report.phases["dlq_replay_s"] = round(time.perf_counter() - t0, 3)
 
     t0 = time.perf_counter()
     appliances = read_appliances_csv(spark, appliances_csv)
     if fanout_partitions:
         appliances = appliances.repartition(fanout_partitions)
-    # Persist the fetch results: the sink pass and the report counters all
-    # consume them, and re-running a high-latency extract per action would
-    # multiply the run's wall-clock (and re-hit the devices).
-    extracted = run_extract(appliances, fetch_fn, extractor).persist()
-    ok, failed = quarantine_split(extracted)
+    # No cache on the extract: a cached extract delayed the first POST until
+    # every fetch was done, and added jobs that re-read it for counters.
+    quarantined = spark.sparkContext.accumulator(0)
+    extracted = run_extract(appliances, fetch_fn, extractor, quarantined=quarantined)
+    ok, _ = quarantine_split(extracted)
     if lanes is None:
-        from concurrent_etl_go_spark.plans.etl_pipeline import transform_cpu_stats
-
         fresh = transform_cpu_stats(ok)  # no routing shuffle: pipelined sink
     else:
         fresh = device_pipeline(ok, lanes=lanes)
-    # empty DLQ: don't pay the union node (plan/codegen cost on the
-    # latency-critical load job) for a zero-row side
-    merged = replay_union(fresh, replayed) if replayed_files else fresh
+    merged = fresh if replayed is None else replay_union(fresh, replayed)
     report.phases["plan_s"] = round(time.perf_counter() - t0, 3)
 
     t0 = time.perf_counter()
-    try:
-        run_http_sink(merged, sink)
-        report.phases["load_s"] = round(time.perf_counter() - t0, 3)
-
-        report.quarantined_rows = failed.count()
-        report.extracted_rows = ok.count()
-    finally:
-        extracted.unpersist()
+    report.delivered_rows, report.spilled_rows = run_http_sink(merged, sink)
+    report.phases["load_s"] = round(time.perf_counter() - t0, 3)
+    report.quarantined_rows = quarantined.value
+    report.extracted_rows = (
+        report.delivered_rows + report.spilled_rows - report.replayed_rows
+    )
 
     # ack: this run's sink pass is done; replayed inputs either landed or
     # were re-spilled under new unique names — the originals can go.
     clear_dlq(replayed_files)
     report.spill_files_after = len(dlq_files(sink.dlq_dir))
-    report.delivered_rows = report.extracted_rows + report.replayed_rows
     report.wall_clock_s = round(time.perf_counter() - start, 3)
     report.log()
     return report

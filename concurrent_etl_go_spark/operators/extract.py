@@ -20,23 +20,16 @@ from collections.abc import Callable, Iterator
 from dataclasses import dataclass
 
 import pandas as pd
+from pyspark import Accumulator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from concurrent_etl_go_spark import schemas
+
 # Output shape: CpuStats fields + error column (None == success).
 EXTRACT_RESULT = T.StructType(
-    [
-        T.StructField("name", T.StringType(), True),
-        T.StructField("timestamp", T.LongType(), True),
-        T.StructField("cpu_number", T.StringType(), True),
-        T.StructField("p_idle", T.StringType(), True),
-        T.StructField("p_user", T.StringType(), True),
-        T.StructField("p_sys", T.StringType(), True),
-        T.StructField("p_irq", T.StringType(), True),
-        T.StructField("p_nice", T.StringType(), True),
-        T.StructField("error", T.StringType(), True),
-    ]
+    schemas.CPU_STATS.fields + [T.StructField("error", T.StringType(), True)]
 )
 
 FetchFn = Callable[[str, str], dict]
@@ -79,10 +72,11 @@ def run_extract(
     fetch_fn: FetchFn = synthetic_fetch,
     config: ExtractorConfig = ExtractorConfig(),
     clock: Callable[[], int] | None = None,
+    quarantined: Accumulator | None = None,
 ) -> DataFrame:
     """Fetch per appliance inside ``mapInPandas`` (S4), stamping the extract
     timestamp (etl/main.go:202) and enforcing the per-call deadline (S5).
-    Fetch failures become error rows instead of exceptions."""
+    Fetch failures become error rows, counted into ``quarantined`` if given."""
     clock = clock or (lambda: int(time.time()))
     timeout_s = config.timeout_s
     delay_s = config.simulate_delay_s
@@ -118,6 +112,8 @@ def run_extract(
         with ThreadPoolExecutor(max_workers=concurrency) as pool:
             for pdf in it:
                 out = list(pool.map(fetch_one, pdf["ip"], pdf["hostname"]))
+                if quarantined is not None:
+                    quarantined.add(sum(row["error"] is not None for row in out))
                 yield pd.DataFrame(
                     out, columns=[f.name for f in EXTRACT_RESULT]
                 )

@@ -8,7 +8,7 @@ Reference topology (etl/main.go:89-162):
 Spark-first restatement: scan and transform are Catalyst expressions inside
 one whole-stage-codegen span; the hash route is a single ``repartition``
 shuffle; micro-batching and the HTTP sink live in ``sinks.http_sink``
-(foreachPartition — the only non-declarative piece). Nothing is ever
+(one ``mapPartitions`` job — the only non-declarative piece). Nothing is ever
 materialized on the driver.
 """
 
@@ -21,12 +21,8 @@ from concurrent_etl_go_spark.functions.casts import cast_zero_default
 from concurrent_etl_go_spark.functions.indicators import pack_indicators
 from concurrent_etl_go_spark.sources.readers import read_table
 
-# Reference constants (etl/main.go:59-66): loadWorkers=10, bufferThreshold=200.
+# Reference constant (etl/main.go:59-66): loadWorkers=10.
 LOAD_WORKERS = 10
-BUFFER_THRESHOLD = 200
-
-# Ordered indicator names (reference etl/main.go:220-226).
-INDICATOR_NAMES = ("utilization", "nice", "user", "system", "irq")
 
 
 def transform_cpu_stats(df: DataFrame) -> DataFrame:

@@ -25,13 +25,11 @@ def dlq_files(dlq_dir: str) -> list[str]:
     return sorted(glob.glob(os.path.join(dlq_dir, "buffer_failed_worker*.json.gz")))
 
 
-def read_dlq(spark: SparkSession, dlq_dir: str, schema: T.StructType) -> DataFrame:
-    """Read all spilled batches (S20/S21). ``spark.read.json`` decompresses
-    ``.gz`` transparently; the explicit schema avoids inference. Returns an
-    empty DataFrame of the right schema when the DLQ is empty."""
-    files = dlq_files(dlq_dir)
-    if not files:
-        return spark.createDataFrame([], schema)
+def read_dlq(spark: SparkSession, files: list[str], schema: T.StructType) -> DataFrame:
+    """Read the spilled batches in ``files`` (S21), as listed by
+    ``dlq_files``: the caller clears exactly the files it replayed.
+    ``spark.read.json`` decompresses ``.gz`` transparently; the explicit
+    schema avoids inference."""
     # each file is a JSON *array* -> multiLine mode parses it as rows
     return spark.read.schema(schema).option("multiLine", "true").json(files)
 

@@ -138,9 +138,10 @@ def spill_batch(
     return path
 
 
-def sink_partition(rows, config: HttpSinkConfig) -> None:
+def sink_partition(rows, config: HttpSinkConfig) -> tuple[int, int]:
     """Per-partition sink loop: chunk -> POST (with bounded retry) -> spill
-    on exhausted retries. Runs on the executor."""
+    on exhausted retries. Runs on the executor; returns (posted, spilled) rows."""
+    posted = spilled = 0
     ctx = TaskContext.get()
     worker_id = ctx.partitionId() if ctx is not None else 0
     dicts = (row.asDict(recursive=True) for row in rows)
@@ -154,18 +155,25 @@ def sink_partition(rows, config: HttpSinkConfig) -> None:
         while True:
             try:
                 post_batch(batch, config, idem_key)
+                posted += len(batch)
                 break
             # TypeError: belt-and-braces — if a payload still defies JSON
             # encoding the batch must spill, not fail the Spark task.
             except (urllib.error.URLError, OSError, RuntimeError, TypeError):
                 if attempt >= config.max_retries:
                     spill_batch(batch, worker_id, config, idem_key)
+                    spilled += len(batch)
                     break
                 time.sleep(config.backoff_s * (2**attempt))
                 attempt += 1
+    return posted, spilled
 
 
-def run_http_sink(df: DataFrame, config: HttpSinkConfig) -> None:
+def run_http_sink(df: DataFrame, config: HttpSinkConfig) -> tuple[int, int]:
     """Sink a DataFrame: each partition is a lane (route upstream with
-    ``repartition(n_lanes, key)`` — see plans.device_pipeline)."""
-    df.foreachPartition(lambda rows: sink_partition(rows, config))
+    ``repartition(n_lanes, key)`` — see plans.device_pipeline). One job,
+    as ``foreachPartition``; returns ``(rows_posted, rows_spilled)`` summed
+    from the task results, which count once per partition."""
+    parts = df.rdd.mapPartitions(lambda rows: [sink_partition(rows, config)])
+    counts = parts.collect()
+    return sum(p for p, _ in counts), sum(s for _, s in counts)

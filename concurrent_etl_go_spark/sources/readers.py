@@ -178,12 +178,3 @@ def read_appliances_csv(spark: SparkSession, path: str) -> DataFrame:
     )
     # <2 fields => hostname is null (reference drops these, etl/main.go:414-417)
     return raw.where(F.col("ip").isNotNull() & F.col("hostname").isNotNull())
-
-
-def read_cpu_stats_csv(spark: SparkSession, path: str) -> DataFrame:
-    """Read a cpu_stats CSV keeping numerics as strings (FIXTURES.md A2).
-
-    Mirrors the reference's wire format (etl/main.go:32-41): the cast to
-    double happens downstream with zero-on-failure semantics.
-    """
-    return spark.read.schema(schemas.CPU_STATS).option("header", "true").csv(path)

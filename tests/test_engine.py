@@ -4,9 +4,13 @@ query facade."""
 
 from __future__ import annotations
 
+import gzip
+import json
+
 import pytest
 
 from concurrent_etl_go_spark.engine import Engine, run_etl
+from concurrent_etl_go_spark.operators.extract import synthetic_fetch
 from concurrent_etl_go_spark.sinks import HttpSinkConfig, dlq_files
 from tests.conftest import SF_SMOKE
 from tests.mock_api import MockApiServer
@@ -63,6 +67,73 @@ def test_run_etl_crash_recovery_two_runs(spark, mock_api, appliances_csv, tmp_pa
     assert r2.replayed_rows == 400
     assert r2.spill_files_after == 0
     assert dlq_files(sink.dlq_dir) == []
+
+
+def dlq_rows(dlq_dir: str) -> int:
+    total = 0
+    for path in dlq_files(dlq_dir):
+        with gzip.open(path, "rt") as fh:
+            total += len(json.load(fh))
+    return total
+
+
+@pytest.mark.parametrize("lanes", [4, None])
+def test_run_report_counts_spilled_rows_as_not_delivered(
+    spark, mock_api, appliances_csv, tmp_path, lanes
+):
+    """``delivered_rows`` is what the receiver accepted: rejected batches
+    are reported as spilled, and the next run's replay balances the books."""
+    sink = HttpSinkConfig(
+        endpoint=mock_api.endpoint, batch_size=50, dlq_dir=str(tmp_path / "dlq")
+    )
+    mock_api.state.fail_remaining = 2
+    r1 = run_etl(spark, appliances_csv, sink, lanes=lanes)
+    assert r1.delivered_rows == mock_api.total_rows_received()
+    assert r1.spilled_rows == dlq_rows(sink.dlq_dir) > 0
+    assert r1.extracted_rows == 400
+    assert r1.delivered_rows + r1.spilled_rows == r1.extracted_rows + r1.replayed_rows
+
+    r2 = run_etl(spark, appliances_csv, sink, lanes=lanes)
+    assert r2.replayed_rows == r1.spilled_rows
+    assert r2.delivered_rows == mock_api.total_rows_received() - r1.delivered_rows
+    assert r2.spilled_rows == dlq_rows(sink.dlq_dir) == 0
+    assert r2.extracted_rows == 400
+    assert r2.delivered_rows + r2.spilled_rows == r2.extracted_rows + r2.replayed_rows
+
+
+# An empty-DLQ run is the sink action alone; under AQE each shuffle's map
+# side runs as its own job: the fan-out repartition, then the lane routing.
+@pytest.mark.parametrize("lanes, jobs", [(4, 3), (None, 2)])
+def test_run_etl_counts_quarantine_inside_the_sink_job(
+    spark, mock_api, appliances_csv, tmp_path, lanes, jobs
+):
+    def unreachable_sevens(ip: str, hostname: str) -> dict:
+        if ip.endswith("7"):
+            raise ConnectionError(f"unreachable {ip}")
+        return synthetic_fetch(ip, hostname)
+
+    sc = spark.sparkContext
+    sink = HttpSinkConfig(endpoint=mock_api.endpoint, dlq_dir=str(tmp_path / "dlq"))
+    group = f"run-etl-jobs-lanes-{lanes}"
+    persisted = sc._jsc.getPersistentRDDs().size()
+    sc.setJobGroup(group, group)
+    try:
+        report = run_etl(
+            spark,
+            appliances_csv,
+            sink,
+            fetch_fn=unreachable_sevens,
+            lanes=lanes,
+            fanout_partitions=8,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # 39 of the 400 addresses end in 7
+    assert report.quarantined_rows == 39
+    assert report.delivered_rows == report.extracted_rows == 361
+    assert mock_api.total_rows_received() == 361
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
+    assert sc._jsc.getPersistentRDDs().size() == persisted
 
 
 def test_engine_facade_sql_and_named_queries(spark):

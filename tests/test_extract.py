@@ -3,7 +3,10 @@ mapInPandas, deadline enforcement, quarantine split."""
 
 from __future__ import annotations
 
+from pyspark.sql import types as T
+
 from concurrent_etl_go_spark.operators.extract import (
+    EXTRACT_RESULT,
     ExtractorConfig,
     quarantine_split,
     run_extract,
@@ -15,6 +18,22 @@ def make_appliances(spark, n=40):
     return spark.createDataFrame(
         [(f"192.168.0.{i}", f"device-{i}") for i in range(n)],
         "ip string, hostname string",
+    )
+
+
+def test_extract_result_is_cpu_stats_plus_error():
+    assert EXTRACT_RESULT == T.StructType(
+        [
+            T.StructField("name", T.StringType(), True),
+            T.StructField("timestamp", T.LongType(), True),
+            T.StructField("cpu_number", T.StringType(), True),
+            T.StructField("p_idle", T.StringType(), True),
+            T.StructField("p_user", T.StringType(), True),
+            T.StructField("p_sys", T.StringType(), True),
+            T.StructField("p_irq", T.StringType(), True),
+            T.StructField("p_nice", T.StringType(), True),
+            T.StructField("error", T.StringType(), True),
+        ]
     )
 
 

@@ -101,7 +101,7 @@ def test_failure_spills_to_dlq_and_replay_recovers(spark, mock_api, tmp_path):
 
     # phase 1: sink entirely down -> every batch spills
     mock_api.state.fail_all = True
-    run_http_sink(df, config)
+    assert run_http_sink(df, config) == (0, 500)  # (rows posted, rows spilled)
     assert mock_api.total_rows_received() == 0
     spills = dlq_files(dlq_dir)
     assert spills, "expected spill files"
@@ -117,7 +117,7 @@ def test_failure_spills_to_dlq_and_replay_recovers(spark, mock_api, tmp_path):
 
     # phase 2: startup recovery — read DLQ, replay through healthy sink
     mock_api.state.fail_all = False
-    dlq_df = read_dlq(spark, dlq_dir, schemas.DEVICE_DATA)
+    dlq_df = read_dlq(spark, spills, schemas.DEVICE_DATA)
     assert dlq_df.count() == 500
     assert dlq_df.schema == schemas.DEVICE_DATA
 
@@ -125,7 +125,7 @@ def test_failure_spills_to_dlq_and_replay_recovers(spark, mock_api, tmp_path):
         "name", F.concat(F.lit("fresh-"), F.col("name"))
     )
     merged = replay_union(fresh.select(*[f.name for f in schemas.DEVICE_DATA]), dlq_df)
-    run_http_sink(merged, config)
+    assert run_http_sink(merged, config) == (600, 0)
     assert mock_api.total_rows_received() == 600
 
     # ack -> delete (deviation from reference's delete-after-enqueue)

@@ -129,7 +129,7 @@ def test_stream_sink_failure_spills_to_dlq(spark, tmp_path):
             T.StructField("value", T.DoubleType()),
         ]
     )
-    assert read_dlq(spark, config.dlq_dir, schema).count() == 1000
+    assert read_dlq(spark, spills, schema).count() == 1000
 
 
 def test_stream_dedup_within_watermark(spark):
