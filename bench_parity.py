@@ -7,8 +7,11 @@ batches, 2 s-delay sink. The reference measures 26.07 s wall
 (decoded etl/cpu.prof; analytic floor = ceil(4000/1000) x 6 s = 24 s
 extract + ~2 s final flush).
 
-Engine equivalent: 32 partitions x 32 threads/partition = 1,024 in-flight
-fetches. Prints one JSON line: walls, analytic floor, warm-run RunReport.
+Engine equivalent: a budget of 32 partitions x 32 threads/partition =
+1,024 in-flight fetches. The budget runs on at most one partition per task
+slot: on fewer than 32 cores ``run_etl`` folds the partitions into one per
+slot with wider pools, so ~1,024 fetches are in flight on any core count.
+Prints one JSON line: walls, analytic floor, warm-run RunReport.
 """
 
 from __future__ import annotations

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import logging
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -19,6 +19,7 @@ from concurrent_etl_go_spark import schemas
 from concurrent_etl_go_spark.operators.extract import (
     ExtractorConfig,
     FetchFn,
+    fanout_shape,
     quarantine_split,
     run_extract,
     synthetic_fetch,
@@ -90,7 +91,11 @@ def run_etl(
     2. Appliance CSV scan + malformed drop (S1-S3).
     3. Extract fan-out (S4-S6): ``fanout_partitions`` x
        ``extractor.concurrency`` bounds in-flight fetches — the semaphore
-       (S13) as partitioning x pool width.
+       (S13) as partitioning x pool width. The budget runs on at most one
+       partition per task slot: past ``defaultParallelism`` partitions the
+       scan is split into one partition per slot and each pool is widened
+       to keep the budget (``fanout_shape``), so every fetch is in flight
+       in one wave instead of queueing behind busy slots.
     4. Transform + hash route (S7-S11). ``lanes=None`` skips the routing
        shuffle and sinks straight from the extract partitions — extract and
        load then PIPELINE within each task (the reference's channel overlap;
@@ -118,7 +123,11 @@ def run_etl(
     t0 = time.perf_counter()
     appliances = read_appliances_csv(spark, appliances_csv)
     if fanout_partitions:
-        appliances = appliances.repartition(fanout_partitions)
+        parts, width = fanout_shape(
+            fanout_partitions, extractor.concurrency, report.default_parallelism
+        )
+        appliances = appliances.repartition(parts)
+        extractor = replace(extractor, concurrency=width)
     # No cache on the extract: a cached extract delayed the first POST until
     # every fetch was done, and added jobs that re-read it for counters.
     quarantined = spark.sparkContext.accumulator(0)

@@ -9,8 +9,8 @@ Engine restatement: a pluggable ``Extractor`` executed inside
 fetch returns ``(payload..., error)``; a quarantine split routes failed
 rows to their own DataFrame instead of silently dropping (the drop remains
 one ``where`` away for strict parity). The semaphore fan-out cap (S13,
-1000 goroutines) maps to partition count x cores: ``repartition(k)``
-upstream sets effective concurrency.
+1000 goroutines) maps to partitions x pool width, laid out by
+``fanout_shape`` so the budget runs on at most one partition per task slot.
 """
 
 from __future__ import annotations
@@ -43,14 +43,25 @@ class ExtractorConfig:
     ``concurrency`` is the per-partition thread-pool width. The reference's
     semaphore allows 1000 in-flight fetches; Spark tasks are thread-bound,
     so sleeping 6 s per row serially would take partitions x cores x 6 s.
-    The per-partition pool restores the fan-out: total in-flight =
-    partitions x concurrency (e.g. 32 partitions x 32 threads ~ 1000) —
-    which is also the right production design for high-latency I/O
-    enrichment (connection pool per partition, not per row)."""
+    The per-partition pool restores the fan-out: the in-flight budget is
+    partitions x concurrency (e.g. 32 partitions x 32 threads ~ 1000), and
+    the budget runs on at most one partition per task slot — ``run_etl``
+    folds surplus partitions into wider pools (``fanout_shape``), so the
+    whole budget is in flight in one wave. A connection pool per partition,
+    not per row, is also the production design for high-latency I/O
+    enrichment."""
 
     timeout_s: float = 8.0
     simulate_delay_s: float = 0.0
     concurrency: int = 32
+
+
+def fanout_shape(partitions: int, concurrency: int, slots: int) -> tuple[int, int]:
+    """``(parts, width)`` that keeps the in-flight budget ``partitions x
+    concurrency`` on at most one partition per task slot: Spark runs only
+    ``slots`` tasks at once, so surplus partitions would queue in waves."""
+    parts = min(partitions, slots)
+    return parts, -(-partitions * concurrency // parts)
 
 
 def synthetic_fetch(ip: str, hostname: str) -> dict:

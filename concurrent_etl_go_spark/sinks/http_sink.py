@@ -3,9 +3,9 @@
 Reference behavior re-expressed (etl/main.go:240-305,378-394):
 
 - micro-batch accumulate + threshold flush at 200 rows (S14) with a final
-  partial flush per lane (S15) -> chunked iteration inside
-  ``foreachPartition`` (partitions are the lanes; one shuffle upstream
-  routes rows to lanes),
+  partial flush per lane (S15) -> chunked iteration inside one
+  ``rdd.mapPartitions(...).collect()`` job (partitions are the lanes; one
+  shuffle upstream routes rows to lanes),
 - JSON array payload (S17), POST with Authorization + Content-Type and a
   client timeout (S18),
 - on failure, spill the batch as gzip JSON to the DLQ (S19) — with UNIQUE
@@ -171,9 +171,10 @@ def sink_partition(rows, config: HttpSinkConfig) -> tuple[int, int]:
 
 def run_http_sink(df: DataFrame, config: HttpSinkConfig) -> tuple[int, int]:
     """Sink a DataFrame: each partition is a lane (route upstream with
-    ``repartition(n_lanes, key)`` — see plans.device_pipeline). One job,
-    as ``foreachPartition``; returns ``(rows_posted, rows_spilled)`` summed
-    from the task results, which count once per partition."""
+    ``repartition(n_lanes, key)`` — see plans.device_pipeline). One
+    ``rdd.mapPartitions(...).collect()`` job; returns ``(rows_posted,
+    rows_spilled)`` summed from the task results, which count once per
+    partition."""
     parts = df.rdd.mapPartitions(lambda rows: [sink_partition(rows, config)])
     counts = parts.collect()
     return sum(p for p, _ in counts), sum(s for _, s in counts)

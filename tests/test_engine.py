@@ -6,11 +6,13 @@ from __future__ import annotations
 
 import gzip
 import json
+import os
+import time
 
 import pytest
 
 from concurrent_etl_go_spark.engine import Engine, run_etl
-from concurrent_etl_go_spark.operators.extract import synthetic_fetch
+from concurrent_etl_go_spark.operators.extract import ExtractorConfig, synthetic_fetch
 from concurrent_etl_go_spark.sinks import HttpSinkConfig, dlq_files
 from tests.conftest import SF_SMOKE
 from tests.mock_api import MockApiServer
@@ -134,6 +136,59 @@ def test_run_etl_counts_quarantine_inside_the_sink_job(
     assert mock_api.total_rows_received() == 361
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
     assert sc._jsc.getPersistentRDDs().size() == persisted
+
+
+def peak_overlap(calls: list[tuple[float, float, int]]) -> int:
+    # an end sorts before a start at the same instant
+    events = sorted([(s, 1) for s, _, _ in calls] + [(e, -1) for _, e, _ in calls])
+    peak = inflight = 0
+    for _, step in events:
+        inflight += step
+        peak = max(peak, inflight)
+    return peak
+
+
+def test_run_etl_runs_the_fanout_budget_on_one_partition_per_slot(
+    spark, mock_api, appliances_csv, tmp_path
+):
+    """Twice as many fan-out partitions as task slots: the extract runs as
+    one task per slot with each pool doubled, so more fetches overlap than
+    the ``2 x slots`` that one-partition-per-task-in-waves allows."""
+    slots = spark.sparkContext.defaultParallelism
+    log_dir = tmp_path / "fetches"
+    log_dir.mkdir()
+
+    def logged_fetch(ip: str, hostname: str) -> dict:
+        """0.05 s, then ``start end taskAttemptId`` to a per-process file."""
+        from pyspark import TaskContext
+
+        start = time.monotonic()
+        time.sleep(0.05)
+        end = time.monotonic()
+        task = TaskContext.get().taskAttemptId()
+        with open(log_dir / f"fetch-{os.getpid()}.log", "a") as fh:
+            fh.write(f"{start:.6f} {end:.6f} {task}\n")
+        return synthetic_fetch(ip, hostname)
+
+    sink = HttpSinkConfig(endpoint=mock_api.endpoint, dlq_dir=str(tmp_path / "dlq"))
+    report = run_etl(
+        spark,
+        appliances_csv,
+        sink,
+        fetch_fn=logged_fetch,
+        extractor=ExtractorConfig(concurrency=2),
+        lanes=None,
+        fanout_partitions=2 * slots,
+    )
+    calls = []
+    for path in log_dir.iterdir():
+        for line in path.read_text().splitlines():
+            start, end, task = line.split()
+            calls.append((float(start), float(end), int(task)))
+    assert len(calls) == 400
+    assert len({task for _, _, task in calls}) == slots
+    assert peak_overlap(calls) > 2 * slots
+    assert report.delivered_rows == mock_api.total_rows_received() == 400
 
 
 def test_engine_facade_sql_and_named_queries(spark):

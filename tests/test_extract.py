@@ -3,11 +3,13 @@ mapInPandas, deadline enforcement, quarantine split."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import types as T
 
 from concurrent_etl_go_spark.operators.extract import (
     EXTRACT_RESULT,
     ExtractorConfig,
+    fanout_shape,
     quarantine_split,
     run_extract,
     synthetic_fetch,
@@ -35,6 +37,23 @@ def test_extract_result_is_cpu_stats_plus_error():
             T.StructField("error", T.StringType(), True),
         ]
     )
+
+
+@pytest.mark.parametrize(
+    "partitions_concurrency_slots, shape",
+    [
+        ((32, 32, 4), (4, 256)),
+        ((32, 32, 32), (32, 32)),
+        ((8, 32, 32), (8, 32)),
+        ((33, 32, 4), (4, 264)),
+    ],
+)
+def test_fanout_shape_keeps_the_budget_on_one_partition_per_slot(
+    partitions_concurrency_slots, shape
+):
+    """Surplus partitions fold into wider pools: the budget partitions x
+    concurrency stays, on at most ``slots`` partitions."""
+    assert fanout_shape(*partitions_concurrency_slots) == shape
 
 
 def test_extract_success_shape_and_timestamp(spark):
