@@ -417,7 +417,15 @@ def _harness(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     their quantized vectors, the MMR candidate pool).  Each frame is
     scoped-persisted: the metric queries read them several times
     (per-arm joins, rank windows), and the calling query's timed
-    region owns the whole build."""
+    region owns the whole build.
+
+    Bound: the largest persisted frame is ``exact``, one row of four
+    scalar columns per (query, other corpus vector) pair, so at most
+    ``len(_QIDS)`` = 5 queries x corpus rows.  ``scoped_persist`` calls
+    ``DataFrame.persist()`` with its default level, MEMORY_AND_DISK_DESER
+    (PySpark's default since 3.0): blocks that do not fit in executor memory spill to
+    local disk instead of failing or recomputing.  Growing ``_QIDS``
+    grows ``exact`` linearly."""
     iv = scoped_persist(_int_vectors(spark, sf_dir))
     qs = _query_set(iv)
     exact = scoped_persist(_exact_pairs(iv, qs))

@@ -231,7 +231,9 @@ def agg_capture_recapture(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``(n1+1)(n2+1)/(m+1) - 1`` estimates how many users EXIST —
     observed or not.  ``coverage_e6`` = observed/estimated is the
     "what fraction of the population have we ever seen" readout a
-    growth team tracks.  Pure integer arithmetic, one row.
+    growth team tracks.  Pure integer arithmetic, one row.  On an empty
+    ``events`` table the estimate is 0 and ``coverage_e6`` is NULL, as
+    DuckDB's integer division by zero gives.
 
     Scale: two distinct-user aggs and a key join — the same shuffle
     class as ``agg_new_vs_returning``."""
@@ -270,7 +272,8 @@ def agg_capture_recapture(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("chapman_estimate"),
         F.expr(
             "CAST(observed * 1000000 div"
-            " ((n1 + 1) * (n2 + 1) div (recaptured + 1) - 1) AS BIGINT)"
+            " NULLIF((n1 + 1) * (n2 + 1) div (recaptured + 1) - 1, 0)"
+            " AS BIGINT)"
         ).alias("coverage_e6"),
     )
 

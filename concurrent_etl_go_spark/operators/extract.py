@@ -10,13 +10,17 @@ fetch returns ``(payload..., error)``; a quarantine split routes failed
 rows to their own DataFrame instead of silently dropping (the drop remains
 one ``where`` away for strict parity). The semaphore fan-out cap (S13,
 1000 goroutines) maps to partitions x pool width, laid out by
-``fanout_shape`` so the budget runs on at most one partition per task slot.
+``fanout_shape`` so the budget runs on at most one partition per task slot;
+inside a partition, ``fan_out`` runs ``concurrency`` drain workers over a
+shared queue of rows.
 """
 
 from __future__ import annotations
 
 import time
-from collections.abc import Callable, Iterator
+from collections import deque
+from collections.abc import Callable, Iterator, Sequence
+from concurrent.futures import Executor, ThreadPoolExecutor
 from dataclasses import dataclass
 
 import pandas as pd
@@ -43,7 +47,8 @@ class ExtractorConfig:
     ``concurrency`` is the per-partition thread-pool width. The reference's
     semaphore allows 1000 in-flight fetches; Spark tasks are thread-bound,
     so sleeping 6 s per row serially would take partitions x cores x 6 s.
-    The per-partition pool restores the fan-out: the in-flight budget is
+    The per-partition pool restores the fan-out as ``concurrency`` drain
+    workers over a shared queue (``fan_out``): the in-flight budget is
     partitions x concurrency (e.g. 32 partitions x 32 threads ~ 1000), and
     the budget runs on at most one partition per task slot — ``run_etl``
     folds surplus partitions into wider pools (``fanout_shape``), so the
@@ -62,6 +67,69 @@ def fanout_shape(partitions: int, concurrency: int, slots: int) -> tuple[int, in
     ``slots`` tasks at once, so surplus partitions would queue in waves."""
     parts = min(partitions, slots)
     return parts, -(-partitions * concurrency // parts)
+
+
+def guarded_fetch(
+    fetch_fn: FetchFn, clock: Callable[[], int], timeout_s: float, delay_s: float
+) -> Callable[[str, str], dict]:
+    """One extract row per call: stamped by ``clock`` (etl/main.go:202),
+    held to the per-call deadline (S5), and a failed fetch becomes a row
+    whose ``error`` is set instead of an exception."""
+
+    def fetch_one(ip: str, hostname: str) -> dict:
+        start = time.monotonic()
+        row = {
+            "name": hostname,
+            "timestamp": clock(),
+            "cpu_number": None,
+            "p_idle": None,
+            "p_user": None,
+            "p_sys": None,
+            "p_irq": None,
+            "p_nice": None,
+            "error": None,
+        }
+        try:
+            if delay_s:
+                time.sleep(delay_s)
+            payload = fetch_fn(ip, hostname)
+            if time.monotonic() - start > timeout_s:
+                raise TimeoutError(f"fetch exceeded {timeout_s}s deadline")
+            row.update(payload)
+        except Exception as exc:  # noqa: BLE001 — quarantine, don't fail task
+            row["error"] = f"{type(exc).__name__}: {exc}"
+        return row
+
+    return fetch_one
+
+
+def fan_out(
+    fetch: Callable[[str, str], dict],
+    ips: Sequence[str],
+    hostnames: Sequence[str],
+    width: int,
+    pool: Executor,
+) -> list[dict]:
+    """``fetch`` every row with at most ``width`` calls in flight — the
+    reference's semaphore (S13). ``min(width, n)`` long-lived workers on
+    ``pool`` pop row indices from one shared deque, so a freed worker takes
+    the next row at once and no row pays for its own future; results come
+    back in input order."""
+    out = [None] * len(ips)
+    todo = deque(range(len(ips)))
+
+    def drain() -> None:
+        pop = todo.popleft
+        while True:
+            try:
+                i = pop()
+            except IndexError:
+                return
+            out[i] = fetch(ips[i], hostnames[i])
+
+    for worker in [pool.submit(drain) for _ in range(min(width, len(ips)))]:
+        worker.result()
+    return out
 
 
 def synthetic_fetch(ip: str, hostname: str) -> dict:
@@ -88,41 +156,24 @@ def run_extract(
     """Fetch per appliance inside ``mapInPandas`` (S4), stamping the extract
     timestamp (etl/main.go:202) and enforcing the per-call deadline (S5).
     Fetch failures become error rows, counted into ``quarantined`` if given."""
-    clock = clock or (lambda: int(time.time()))
-    timeout_s = config.timeout_s
-    delay_s = config.simulate_delay_s
+    fetch_one = guarded_fetch(
+        fetch_fn,
+        clock or (lambda: int(time.time())),
+        config.timeout_s,
+        config.simulate_delay_s,
+    )
     concurrency = max(1, config.concurrency)
 
-    def fetch_one(ip: str, hostname: str) -> dict:
-        start = time.monotonic()
-        row = {
-            "name": hostname,
-            "timestamp": clock(),
-            "cpu_number": None,
-            "p_idle": None,
-            "p_user": None,
-            "p_sys": None,
-            "p_irq": None,
-            "p_nice": None,
-            "error": None,
-        }
-        try:
-            if delay_s:
-                time.sleep(delay_s)
-            payload = fetch_fn(ip, hostname)
-            if time.monotonic() - start > timeout_s:
-                raise TimeoutError(f"fetch exceeded {timeout_s}s deadline")
-            row.update(payload)
-        except Exception as exc:  # noqa: BLE001 — quarantine, don't fail task
-            row["error"] = f"{type(exc).__name__}: {exc}"
-        return row
-
     def fetch_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from concurrent.futures import ThreadPoolExecutor
-
         with ThreadPoolExecutor(max_workers=concurrency) as pool:
             for pdf in it:
-                out = list(pool.map(fetch_one, pdf["ip"], pdf["hostname"]))
+                out = fan_out(
+                    fetch_one,
+                    pdf["ip"].tolist(),
+                    pdf["hostname"].tolist(),
+                    concurrency,
+                    pool,
+                )
                 if quarantined is not None:
                     quarantined.add(sum(row["error"] is not None for row in out))
                 yield pd.DataFrame(

@@ -386,7 +386,9 @@ def window_keltner(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fold-composition identity, O(days^1.5) not O(days^2)); band
     emissions are unrounded ``+ 0.0`` shared trees over the two fold
     states.  Day i pairs mid_i with atr over TR[1..i-1] (TR needs the
-    previous close, so the ATR series is one element shorter).
+    previous close, so the ATR series is one element shorter).  Fewer
+    than two days emit no rows, as the oracle's ``days[2:len(days)]``;
+    the series is dropped before the folds, whose seeds index element 1.
 
     Scale: grain-first day rollup; two chunked prefix folds bounded by
     series length."""
@@ -432,7 +434,7 @@ def window_keltner(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("trs"),
     )
     sd = scoped_persist(
-        series.select(
+        series.where(F.size("cls") >= 2).select(
             "cls",
             "days",
             "trs",

@@ -1,9 +1,10 @@
-"""Degenerate-input contracts for the embedding kernels, and the shared
+"""Degenerate-input contracts for registry queries, and the shared
 checkpoint and edge-symmetrization helpers.
 
-A registry query on an empty or all-zero ``embeddings`` table must return
-a defined result (the empty schema, or whatever its DuckDB oracle
-yields) instead of crashing in the driver-side fit or power iteration.
+A registry query on an empty or all-zero input table must return a
+defined result (the empty schema, or whatever its DuckDB oracle yields)
+instead of crashing in the driver-side fit, the power iteration or an
+ANSI-mode expression.
 """
 
 from __future__ import annotations
@@ -18,18 +19,59 @@ from tests.conftest import SF_SMOKE
 from tests.test_oracle_parity import frames_match
 
 
-def _embeddings_dir(tmp_path, transform) -> str:
-    """A one-table sf dir holding ``transform`` of the sf0.001
-    ``embeddings`` table (schema and footer types preserved)."""
-    table = transform(pq.read_table(os.path.join(SF_SMOKE, "embeddings.parquet")))
-    pq.write_table(table, str(tmp_path / "embeddings.parquet"))
+def _table_dir(tmp_path, name, transform) -> str:
+    """A one-table sf dir holding ``transform`` of the sf0.001 table
+    ``name`` (schema and footer types preserved)."""
+    table = transform(pq.read_table(os.path.join(SF_SMOKE, f"{name}.parquet")))
+    pq.write_table(table, str(tmp_path / f"{name}.parquet"))
     return str(tmp_path)
+
+
+def _empty(table: pa.Table) -> pa.Table:
+    return table.slice(0, 0)
+
+
+def _query_vs_oracle(spark, name, sf_dir, table):
+    """(Spark result, DuckDB oracle result) of registry query ``name`` on
+    the one-table sf dir ``sf_dir``."""
+    from concurrent_etl_go_spark.operators import ORACLES, QUERIES
+
+    got = QUERIES[name](spark, sf_dir).toPandas()
+    con = duckdb.connect()
+    try:
+        con.execute(
+            f"CREATE VIEW {table} AS SELECT * FROM '{sf_dir}/{table}.parquet'"
+        )
+        want = con.execute(ORACLES[name]).df()
+    finally:
+        con.close()
+    return got, want
+
+
+def test_capture_recapture_on_zero_row_events_matches_oracle(spark, tmp_path):
+    """No events: every count and the Chapman estimate are 0, so the
+    coverage divisor is 0; DuckDB's integer division gives NULL there."""
+    sf_dir = _table_dir(tmp_path, "events", _empty)
+    got, want = _query_vs_oracle(spark, "agg_capture_recapture", sf_dir, "events")
+    assert len(want) == 1 and want["coverage_e6"].isna().all()
+    assert want["chapman_estimate"].tolist() == [0]
+    problems = frames_match(got, want)
+    assert not problems, "; ".join(problems)
+
+
+def test_keltner_on_zero_row_orders_is_empty_like_oracle(spark, tmp_path):
+    sf_dir = _table_dir(tmp_path, "orders", _empty)
+    got, want = _query_vs_oracle(spark, "window_keltner", sf_dir, "orders")
+    assert len(want) == 0 and len(got) == 0
+    assert list(got.columns) == ["day", "mid", "upper_band", "lower_band"]
+    problems = frames_match(got, want)
+    assert not problems, "; ".join(problems)
 
 
 def test_ivfpq_topk_on_zero_row_embeddings(spark, tmp_path):
     from concurrent_etl_go_spark.llm.ivfpq import similarity_ivfpq_topk
 
-    sf_dir = _embeddings_dir(tmp_path, lambda t: t.slice(0, 0))
+    sf_dir = _table_dir(tmp_path, "embeddings", _empty)
     out = similarity_ivfpq_topk(spark, sf_dir)
     assert out.schema.simpleString() == "struct<vec_id:bigint,sim:double>"
     assert out.collect() == []
@@ -56,7 +98,7 @@ def test_top_component_all_zero_matches_oracle(spark, tmp_path):
         embeddings_top_component,
     )
 
-    sf_dir = _embeddings_dir(tmp_path, _zeroed)
+    sf_dir = _table_dir(tmp_path, "embeddings", _zeroed)
     got = embeddings_top_component(spark, sf_dir).toPandas()
     con = duckdb.connect()
     try:

@@ -3,13 +3,20 @@ mapInPandas, deadline enforcement, quarantine split."""
 
 from __future__ import annotations
 
+import sys
+import threading
+import time
+from concurrent.futures import ThreadPoolExecutor
+
 import pytest
 from pyspark.sql import types as T
 
 from concurrent_etl_go_spark.operators.extract import (
     EXTRACT_RESULT,
     ExtractorConfig,
+    fan_out,
     fanout_shape,
+    guarded_fetch,
     quarantine_split,
     run_extract,
     synthetic_fetch,
@@ -54,6 +61,85 @@ def test_fanout_shape_keeps_the_budget_on_one_partition_per_slot(
     """Surplus partitions fold into wider pools: the budget partitions x
     concurrency stays, on at most ``slots`` partitions."""
     assert fanout_shape(*partitions_concurrency_slots) == shape
+
+
+def _rows(n):
+    return [f"10.0.0.{i}" for i in range(n)], [f"device-{i}" for i in range(n)]
+
+
+def test_fan_out_fetches_every_row_once_in_input_order():
+    """More workers than cores and a short switch interval: a row handed to
+    two workers, or to none, shows up in the call count."""
+    ips, hosts = _rows(2000)
+    calls = []
+
+    def fetch(ip, hostname):
+        calls.append(ip)  # list.append is atomic under the GIL
+        return {"ip": ip, "name": hostname}
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=16) as pool:
+            out = fan_out(fetch, ips, hosts, 16, pool)
+    finally:
+        sys.setswitchinterval(interval)
+    assert sorted(calls) == sorted(ips)
+    assert [r["ip"] for r in out] == ips
+    assert [r["name"] for r in out] == hosts
+
+
+def test_fan_out_keeps_exactly_width_fetches_in_flight():
+    """The first ``width`` fetches meet at a barrier, so they must all be in
+    flight together, and stay in flight a little longer so that a surplus
+    worker would start a row beside them; the pool is wider than ``width``,
+    so the cap comes from ``fan_out`` itself."""
+    width, n = 4, 20
+    ips, hosts = _rows(n)
+    barrier = threading.Barrier(width, timeout=10)
+    lock = threading.Lock()
+    started = 0
+    inflight = peak = 0
+
+    def fetch(ip, hostname):
+        nonlocal started, inflight, peak
+        with lock:
+            started += 1
+            first_wave = started <= width
+            inflight += 1
+            peak = max(peak, inflight)
+        if first_wave:
+            barrier.wait()
+            time.sleep(0.05)
+        with lock:
+            inflight -= 1
+        return {"ip": ip}
+
+    with ThreadPoolExecutor(max_workers=2 * width) as pool:
+        out = fan_out(fetch, ips, hosts, width, pool)
+    assert [r["ip"] for r in out] == ips
+    assert peak == width
+
+
+def test_fan_out_turns_a_raising_fetch_into_an_error_row():
+    def flaky_fetch(ip, hostname):
+        if ip.endswith("3"):
+            raise ConnectionError(f"unreachable {ip}")
+        return synthetic_fetch(ip, hostname)
+
+    ips, hosts = _rows(10)
+    fetch = guarded_fetch(flaky_fetch, lambda: 1751450637, 8.0, 0.0)
+    with ThreadPoolExecutor(max_workers=3) as pool:
+        out = fan_out(fetch, ips, hosts, 3, pool)
+    assert [r["name"] for r in out] == hosts
+    assert [r["error"] is not None for r in out] == [i == 3 for i in range(10)]
+    assert out[3]["error"] == "ConnectionError: unreachable 10.0.0.3"
+    assert out[3]["timestamp"] == 1751450637 and out[3]["p_idle"] is None
+
+
+def test_fan_out_of_no_rows_is_empty():
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        assert fan_out(synthetic_fetch, [], [], 2, pool) == []
 
 
 def test_extract_success_shape_and_timestamp(spark):
