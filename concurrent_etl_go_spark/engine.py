@@ -26,7 +26,7 @@ from concurrent_etl_go_spark.operators.extract import (
 )
 from concurrent_etl_go_spark.plans.etl_pipeline import (
     LOAD_WORKERS,
-    device_pipeline,
+    route_lanes,
     transform_cpu_stats,
 )
 from concurrent_etl_go_spark.session import get_spark
@@ -87,7 +87,8 @@ def run_etl(
 ) -> RunReport:
     """The reference's whole ``main`` as one Spark run.
 
-    1. DLQ replay scan (S20-S22): spilled batches become a source.
+    1. DLQ replay scan (S20-S22): spilled batches become a source that
+       joins the transformed rows in step 4.
     2. Appliance CSV scan + malformed drop (S1-S3).
     3. Extract fan-out (S4-S6): ``fanout_partitions`` x
        ``extractor.concurrency`` bounds in-flight fetches — the semaphore
@@ -96,13 +97,21 @@ def run_etl(
        scan is split into one partition per slot and each pool is widened
        to keep the budget (``fanout_shape``), so every fetch is in flight
        in one wave instead of queueing behind busy slots.
-    4. Transform + hash route (S7-S11). ``lanes=None`` skips the routing
-       shuffle and sinks straight from the extract partitions — extract and
-       load then PIPELINE within each task (the reference's channel overlap;
-       a repartition would barrier the whole extract before the first POST).
-       Use explicit lanes only when batch-packing efficiency needs it.
+    4. Transform (S7-S10), union with the replayed rows, hash route (S11).
+       The route sends replayed rows into the lanes with the fresh ones, a
+       device's rows all in one lane, as the reference re-enqueues them;
+       it makes ``min(lanes, defaultParallelism)`` lanes, so the sink
+       stage runs in one wave of Python tasks and at most that many POSTs
+       are in flight. ``lanes=None`` skips the routing shuffle and sinks
+       straight from the extract and DLQ scan partitions — extract and
+       load then PIPELINE within each task (the reference's channel
+       overlap; a repartition would barrier the whole extract before the
+       first POST). Use explicit lanes only when batch-packing efficiency
+       needs it.
     5. Micro-batched HTTP load with DLQ spill on failure (S14-S19); steps
-       2-5 run inside this one sink action, timed as ``load_s``.
+       2-5 run inside this one sink action, timed as ``load_s`` (under AQE
+       each shuffle's map side runs as a job of its own; the DLQ scan runs
+       in the routing shuffle's map side).
     6. DLQ files that were replayed are deleted only after the sink pass
        completes (stronger than the reference's delete-after-enqueue).
     """
@@ -133,11 +142,11 @@ def run_etl(
     quarantined = spark.sparkContext.accumulator(0)
     extracted = run_extract(appliances, fetch_fn, extractor, quarantined=quarantined)
     ok, _ = quarantine_split(extracted)
-    if lanes is None:
-        fresh = transform_cpu_stats(ok)  # no routing shuffle: pipelined sink
-    else:
-        fresh = device_pipeline(ok, lanes=lanes)
-    merged = fresh if replayed is None else replay_union(fresh, replayed)
+    merged = transform_cpu_stats(ok)
+    if replayed is not None:
+        merged = replay_union(merged, replayed)
+    if lanes is not None:  # None: no routing shuffle, a pipelined sink
+        merged = route_lanes(merged, min(lanes, report.default_parallelism))
     report.phases["plan_s"] = round(time.perf_counter() - t0, 3)
 
     t0 = time.perf_counter()

@@ -61,7 +61,8 @@ def _global_rank(df: DataFrame, *order_cols: str) -> tuple[DataFrame, int]:
     correctness); the tie-break columns only disambiguate order within a
     bucket.
 
-    Returns (df + ``rn`` column, total row count).
+    Returns (df + ``rn`` column, total row count); a zero-row ``df`` comes
+    back with a ``long`` ``rn`` column and 0, with no further job.
     """
     cols = [F.col(c) for c in order_cols]
     first = order_cols[0]
@@ -76,6 +77,8 @@ def _global_rank(df: DataFrame, *order_cols: str) -> tuple[DataFrame, int]:
         for r in parted.groupBy("_pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
     }
     n = sum(sizes.values())
+    if n == 0:  # no buckets: an empty map literal cannot be indexed
+        return df.withColumn("rn", F.lit(None).cast("long")), 0
     offsets = []
     acc = 0
     for pid in sorted(sizes):

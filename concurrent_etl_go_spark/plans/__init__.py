@@ -1,7 +1,7 @@
 from concurrent_etl_go_spark.plans.etl_pipeline import (
-    device_pipeline,
     flagship,
+    route_lanes,
     transform_cpu_stats,
 )
 
-__all__ = ["device_pipeline", "flagship", "transform_cpu_stats"]
+__all__ = ["flagship", "route_lanes", "transform_cpu_stats"]

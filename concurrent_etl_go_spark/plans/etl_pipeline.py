@@ -6,10 +6,11 @@ Reference topology (etl/main.go:89-162):
         -> micro-batch (200) -> JSON POST sink -> DLQ spill on failure
 
 Spark-first restatement: scan and transform are Catalyst expressions inside
-one whole-stage-codegen span; the hash route is a single ``repartition``
-shuffle; micro-batching and the HTTP sink live in ``sinks.http_sink``
-(one ``mapPartitions`` job — the only non-declarative piece). Nothing is ever
-materialized on the driver.
+one whole-stage-codegen span; replayed DLQ rows join the transformed rows
+ahead of the route, and the hash route is one ``repartition`` by device name
+(``route_lanes``); micro-batching and the HTTP sink live in
+``sinks.http_sink`` (one ``mapPartitions`` job — the only non-declarative
+piece). Nothing is ever materialized on the driver.
 """
 
 from __future__ import annotations
@@ -51,14 +52,16 @@ def transform_cpu_stats(df: DataFrame) -> DataFrame:
     )
 
 
-def device_pipeline(cpu_stats: DataFrame, lanes: int = LOAD_WORKERS) -> DataFrame:
-    """Transform + hash-route (S11): the pre-sink half of the reference flow.
+def route_lanes(device_data: DataFrame, lanes: int) -> DataFrame:
+    """Hash route (S11): every row of a device lands in one of ``lanes``
+    partitions, the sink's lanes.
 
-    The reference routes rows to ``lanes`` loader goroutines by ordinal mod
-    (etl/main.go:143-145); Spark expresses the same co-location as one hash
-    repartition — the only shuffle in the pipeline.
+    The reference routes rows to its loader goroutines by ordinal mod
+    (etl/main.go:143-145) and re-enqueues replayed DLQ rows into the same
+    lanes (etl/main.go:329-331); Spark expresses that co-location as one
+    hash repartition on ``name``, so route fresh and replayed rows together.
     """
-    return transform_cpu_stats(cpu_stats).repartition(lanes, F.col("name"))
+    return device_data.repartition(lanes, F.col("name"))
 
 
 def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:

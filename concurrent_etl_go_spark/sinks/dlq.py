@@ -8,7 +8,10 @@ decode, re-enqueue, delete after enqueue. Engine deviations (SURVEY
 - files are deleted only AFTER the run's sink acks (``clear_dlq`` is called
   by the orchestrator post-run, not at read time).
 
-Replayed rows are just another source: ``read_dlq(...).unionByName(fresh)``.
+Replayed rows are a second source beside the extract: ``replay_union``
+appends them to the transformed rows before the hash route, so a device's
+replayed rows reach the same sink lane as its fresh ones (the reference
+re-enqueues them into its loader lanes, etl/main.go:329-331).
 """
 
 from __future__ import annotations
@@ -35,9 +38,11 @@ def read_dlq(spark: SparkSession, files: list[str], schema: T.StructType) -> Dat
 
 
 def replay_union(fresh: DataFrame, dlq: DataFrame) -> DataFrame:
-    """Replayed rows merge ahead of fresh data (implicit union, SURVEY
-    §2.A.1 set-ops row)."""
-    return dlq.unionByName(fresh)
+    """Fresh rows, then the replayed rows unchanged (implicit union,
+    SURVEY §2.A.1 set-ops row). The fresh side comes first so its
+    partitions, the extract's long map tasks, get the lowest partition
+    ids and launch first."""
+    return fresh.unionByName(dlq)
 
 
 def clear_dlq(paths: list[str]) -> None:

@@ -171,7 +171,7 @@ def sink_partition(rows, config: HttpSinkConfig) -> tuple[int, int]:
 
 def run_http_sink(df: DataFrame, config: HttpSinkConfig) -> tuple[int, int]:
     """Sink a DataFrame: each partition is a lane (route upstream with
-    ``repartition(n_lanes, key)`` — see plans.device_pipeline). One
+    ``repartition(n_lanes, key)`` — see plans.route_lanes). One
     ``rdd.mapPartitions(...).collect()`` job; returns ``(rows_posted,
     rows_spilled)`` summed from the task results, which count once per
     partition."""

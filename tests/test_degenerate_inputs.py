@@ -68,6 +68,20 @@ def test_keltner_on_zero_row_orders_is_empty_like_oracle(spark, tmp_path):
     assert not problems, "; ".join(problems)
 
 
+def test_global_rank_queries_on_zero_row_tables_match_oracles(spark, tmp_path):
+    """``_global_rank`` finds no buckets on an empty table; both of its
+    queries return their oracles' empty frames."""
+    for name, table in (
+        ("window_ntile_cume_scalable", "customer"),
+        ("profile_key_islands", "orders"),
+    ):
+        sf_dir = _table_dir(tmp_path, table, _empty)
+        got, want = _query_vs_oracle(spark, name, sf_dir, table)
+        assert len(want) == 0 and len(got) == 0
+        problems = frames_match(got, want)
+        assert not problems, f"{name}: " + "; ".join(problems)
+
+
 def test_ivfpq_topk_on_zero_row_embeddings(spark, tmp_path):
     from concurrent_etl_go_spark.llm.ivfpq import similarity_ivfpq_topk
 

@@ -8,6 +8,7 @@ import gzip
 import json
 import os
 import time
+from collections import Counter, defaultdict
 
 import pytest
 
@@ -136,6 +137,64 @@ def test_run_etl_counts_quarantine_inside_the_sink_job(
     assert mock_api.total_rows_received() == 361
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
     assert sc._jsc.getPersistentRDDs().size() == persisted
+
+
+def test_run_etl_sinks_replayed_rows_in_their_devices_lanes(
+    spark, mock_api, appliances_csv, tmp_path
+):
+    """More lanes than task slots and a DLQ to replay: the replayed rows are
+    routed with the fresh ones, the sink stage runs one task per slot, each
+    device's rows all arrive through one lane, and no job is added for the
+    replay beyond its count (the DLQ scan runs in the routing map stage)."""
+
+    def seed_fetch(ip: str, hostname: str) -> dict:
+        """cpu "1" tells the seeding run's rows, the replayed ones, apart."""
+        return {**synthetic_fetch(ip, hostname), "cpu_number": "1"}
+
+    sc = spark.sparkContext
+    slots = sc.defaultParallelism
+    dlq_dir = str(tmp_path / "dlq")
+    mock_api.state.fail_all = True
+    seeding = HttpSinkConfig(endpoint=mock_api.endpoint, dlq_dir=dlq_dir)
+    run_etl(spark, appliances_csv, seeding, fetch_fn=seed_fetch, lanes=4)
+    assert dlq_rows(dlq_dir) == 400
+    mock_api.state.fail_all = False
+
+    sink = HttpSinkConfig(
+        endpoint=mock_api.endpoint, dlq_dir=dlq_dir, idempotency_scope="replay"
+    )
+    group = "run-etl-replay-lanes"
+    sc.setJobGroup(group, group)
+    try:
+        report = run_etl(spark, appliances_csv, sink, lanes=2 * slots + 1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+    tracker = sc.statusTracker()
+    jobs = sorted(tracker.getJobIdsForGroup(group))
+    # replay count (map side + result), then routing map side + sink
+    assert len(jobs) == 4
+    sink_stage = max(tracker.getJobInfo(jobs[-1]).stageIds)
+    assert tracker.getStageInfo(sink_stage).numTasks == slots
+
+    lanes_of = defaultdict(set)
+    arrivals = Counter()
+    for request in mock_api.state.requests:
+        scope, lane, _ = request.idem_key.split("/")
+        assert scope == "replay"
+        for row in request.batch:
+            lanes_of[row["name"]].add(lane)
+            arrivals[row["name"], row["cpu_number"]] += 1
+    names = {f"device-{i}" for i in range(400)}
+    assert arrivals == Counter({(n, c): 1 for n in names for c in "01"})
+    assert all(len(lanes) == 1 for lanes in lanes_of.values())
+    assert report.replayed_rows == report.extracted_rows == 400
+    assert report.delivered_rows == mock_api.total_rows_received() == 800
+    assert report.spilled_rows == 0
+    assert report.delivered_rows + report.spilled_rows == (
+        report.extracted_rows + report.replayed_rows
+    )
+    assert dlq_files(dlq_dir) == []
 
 
 def peak_overlap(calls: list[tuple[float, float, int]]) -> int:

@@ -19,7 +19,7 @@ from concurrent_etl_go_spark.sinks import (
     replay_union,
     run_http_sink,
 )
-from concurrent_etl_go_spark.plans import device_pipeline
+from concurrent_etl_go_spark.plans import route_lanes, transform_cpu_stats
 from tests.mock_api import MockApiServer
 
 
@@ -43,7 +43,7 @@ def make_device_df(spark, n=1000):
         F.lit("0.5").alias("p_irq"),
         F.when(F.col("id") % 50 == 0, "N/A").otherwise("3").alias("p_nice"),
     )
-    return device_pipeline(cpu_stats, lanes=4)
+    return route_lanes(transform_cpu_stats(cpu_stats), lanes=4)
 
 
 def test_happy_path_batches_and_payload(spark, mock_api, tmp_path):
