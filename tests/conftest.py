@@ -17,7 +17,10 @@ SF_CORRECTNESS = "/root/testdata/sf0.01"
 def spark():
     from concurrent_etl_go_spark.session import get_spark
 
-    cpus = os.environ.get("SPARK_GRAFT_TEST_CPUS", "8")
+    # one task slot per usable core (at most 8): on a smaller host, more
+    # slots than cores only add task-scheduling overhead per tiny stage
+    default_cpus = min(8, len(os.sched_getaffinity(0)))
+    cpus = os.environ.get("SPARK_GRAFT_TEST_CPUS", str(default_cpus))
     spark = get_spark(
         app_name="engine-tests",
         master=f"local[{cpus}]",

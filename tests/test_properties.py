@@ -331,7 +331,7 @@ def test_mad_outlier_count_invariant_under_affine_transform(
     assert base == after
 
 
-def test_ntile_expr_matches_sql_ntile_for_all_small_n():
+def test_ntile_expr_matches_sql_ntile_for_all_small_n(spark):
     """The scalable twin's closed-form ntile (operators/quantiles.py::
     _ntile_expr, a pure function of (rank, n)) must reproduce SQL ntile
     semantics EXACTLY for every row count and bucket count in a range
@@ -341,11 +341,6 @@ def test_ntile_expr_matches_sql_ntile_for_all_small_n():
     n in [1, 40] x k in {2, 3, 4, 7, 10}."""
     from concurrent_etl_go_spark.operators.quantiles import _ntile_expr
     from pyspark.sql import functions as F
-    from concurrent_etl_go_spark.session import get_spark
-
-    spark = get_spark(
-        app_name="engine-tests", master="local[8]", shuffle_partitions=8
-    )
 
     def reference_ntile(rn: int, n: int, k: int) -> int:
         q, r = divmod(n, k)
