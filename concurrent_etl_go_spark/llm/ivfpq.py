@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 
 from concurrent_etl_go_spark.operators.registry import query
 from concurrent_etl_go_spark.llm.kmeans import (
+    EmptyCorpusError,
     PQ_CODEBOOK_K,
     PQ_SUBSPACES,
 )
@@ -204,10 +205,6 @@ def _source_fingerprint(sf_dir: str) -> list[int]:
     a refreshed corpus invalidates the index without reading any data."""
     st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
     return [st.st_size, st.st_mtime_ns]
-
-
-class EmptyCorpusError(ValueError):
-    """``fit_ivfpq`` found no vectors to seed its quantizers from."""
 
 
 def fit_ivfpq(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, dict]:

@@ -277,6 +277,11 @@ def embeddings_pq_assign_portable(
     selection)."""
     iv = _int_vectors(spark, sf_dir)
     lut = _query_lut(iv)
+    if not lut:  # no query row or no donors: the oracle's LUT join is empty
+        codes = ", ".join(f"code_{m} long" for m in range(_M))
+        return spark.createDataFrame(
+            [], f"vec_id long, cell long, {codes}, adist long"
+        )
     return _assignments(iv).select(
         "vec_id",
         "cell",
@@ -327,6 +332,10 @@ def similarity_ivfpq_portable(
     to full vectors, and the final window ranks <= ``_RERANK`` rows."""
     iv = _int_vectors(spark, sf_dir)
     lut = _query_lut(iv)
+    if not lut:  # no query row or no donors: the oracle's LUT join is empty
+        return spark.createDataFrame(
+            [], "rank long, vec_id long, cell long, adist long, exact_d2 long"
+        )
 
     q_cells = (
         _cell_dists(

@@ -42,6 +42,10 @@ def _dists_expr(v_sql: str, centroids: list[list[float]]):
     )
 
 
+class EmptyCorpusError(ValueError):
+    """A k-means fit found no vectors to seed its centroids from."""
+
+
 def kmeans_fit(
     vectors: DataFrame, k: int = 8, iterations: int = 5
 ) -> tuple[DataFrame, list[list[float]]]:
@@ -51,6 +55,7 @@ def kmeans_fit(
     passes through to the assignment DataFrame (so callers can keep
     precomputed norms etc. without a re-join). Deterministic: init = the k
     smallest vec_ids; argmin ties break to the lowest cluster index.
+    Raises ``EmptyCorpusError`` when no vector has an id below ``k``.
 
     Driver traffic per iteration is exactly the k x dim centroid matrix —
     the canonical Lloyd's structure; everything else is one distributed
@@ -63,6 +68,8 @@ def kmeans_fit(
         list(row.v)
         for row in vectors.where(F.col("vec_id") < k).orderBy("vec_id").collect()
     ]
+    if not centroids:
+        raise EmptyCorpusError("no seed vectors for k-means")
 
     assigned = None
     for _ in range(iterations):
@@ -111,7 +118,12 @@ def similarity_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors = emb.repartition(parallelism, "vec_id").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    return kmeans_assign(vectors, k=8, iterations=5)
+    try:
+        return kmeans_assign(vectors, k=8, iterations=5)
+    except EmptyCorpusError:  # zero-row embeddings: nothing to cluster
+        return spark.createDataFrame(
+            [], "vec_id long, cluster int, sq_dist double"
+        )
 
 
 PQ_SUBSPACES = 4

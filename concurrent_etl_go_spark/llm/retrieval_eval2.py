@@ -1,26 +1,21 @@
-"""Retrieval evaluation, part 2 — interpolated precision-recall and
-rank-biased overlap, all-integer under the driver's hash compare.
+"""Retrieval evaluation, part 2 — interpolated precision-recall, and
+dataset mining from the retrieval ground truth, all-integer under the
+driver's hash compare.
 
 Extends ``retrieval_eval.py``'s harness (fixed query set, integer-L2
-ground truth, three retrieval arms) with two more standard IR readouts:
+ground truth, three retrieval arms) with the 11-point INTERPOLATED
+PRECISION-RECALL curve (the TREC summary: at each recall level r in
+{0.0 .. 1.0}, the best precision achievable at any cutoff whose recall
+reaches r — Manning, Raghavan & Schütze 2008 §8.4, public literature),
+averaged over the query set.  Rank-biased overlap between the BM25 and
+rerank rankings lives with the rankings it compares
+(``operators/search2.py::search_eval_rbo``).
 
-* the 11-point INTERPOLATED PRECISION-RECALL curve (the TREC summary:
-  at each recall level r in {0.0 .. 1.0}, the best precision achievable
-  at any cutoff whose recall reaches r — Manning, Raghavan & Schütze
-  2008 §8.4, public literature), averaged over the query set;
-* RANK-BIASED OVERLAP between the lexical BM25 ranking and the
-  cross-encoder rerank (Webber, Moffat & Zobel 2010): the
-  top-weighted agreement measure for indefinite rankings, here the
-  truncated-sum form at depth 20 with persistence p = 0.9.
+Integer discipline: precision/recall are floor basis points.
 
-Integer discipline: precision/recall are floor basis points; RBO's
-per-depth weights ``round(1e9 * (1-p) * p^(d-1))`` are precomputed in
-Python once and embedded as the same int64 literals in both dialects,
-so the score is a pure integer sum (order-independent, bit-exact).
-
-Scale: both metrics run over |arms| x |Q| x k retrieved rows (the
+Scale: the metric runs over |arms| x |Q| x k retrieved rows (the
 corpus-scan cost lives in the ground-truth arm, paid once, exactly as
-in ``retrieval_eval.py``); the RBO join touches two top-20 lists.
+in ``retrieval_eval.py``).
 """
 
 from __future__ import annotations
@@ -40,16 +35,6 @@ from concurrent_etl_go_spark.operators.registry import query, scoped_persist
 #: 11 standard recall levels, in basis points.
 _PR_LEVELS = tuple(i * 1000 for i in range(11))
 
-#: RBO persistence and integer depth weights: w_d = round(1e9*(1-p)*
-#: p^(d-1)) for d = 1..20 — the geometric top-weighting, frozen as
-#: int64 literals shared by both engines.
-RBO_P = 0.9
-RBO_DEPTH = 20
-_RBO_W = tuple(
-    round(1e9 * (1 - RBO_P) * RBO_P ** (d - 1))
-    for d in range(1, RBO_DEPTH + 1)
-)
-_RBO_W_SQL = ", ".join(str(w) for w in _RBO_W)
 _LEVELS_SQL = ", ".join(str(lv) for lv in _PR_LEVELS)
 
 
@@ -160,133 +145,6 @@ def search_eval_interpolated_pr(
             "p_interp_bp_avg"
         )
     )
-
-
-@query(
-    "search_eval_rbo",
-    oracle=f"""
-    WITH w AS (
-      SELECT unnest([{_RBO_W_SQL}]) AS wt,
-             unnest(range(1, {RBO_DEPTH + 1})) AS d
-    ),
-    a AS (
-      SELECT doc_id, bm25_rank FROM (
-        SELECT doc_id, row_number() OVER (ORDER BY bm25 DESC, doc_id)
-                 AS bm25_rank
-        FROM ({{bm25}}) t
-      ) WHERE bm25_rank <= {RBO_DEPTH}
-    ),
-    b AS (
-      SELECT doc_id, rank AS xe_rank FROM ({{xe}}) t
-      WHERE rank <= {RBO_DEPTH}
-    ),
-    common AS (
-      SELECT a.doc_id, GREATEST(a.bm25_rank, b.xe_rank) AS m
-      FROM a JOIN b USING (doc_id)
-    ),
-    terms AS (
-      SELECT w.d, w.wt,
-             (SELECT COUNT(*) FROM common WHERE common.m <= w.d) AS x_d
-      FROM w
-    )
-    SELECT CAST({RBO_DEPTH} AS BIGINT) AS depth,
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM common) AS n_common,
-           CAST(SUM(wt * x_d // d) AS BIGINT) AS rbo_e9
-    FROM terms
-    """,
-)
-def search_eval_rbo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rank-biased overlap (p = 0.9) between the BM25 top-20 and the
-    cross-encoder rerank top-20: the truncated geometric sum
-    ``sum_d w_d * |A_1..d ∩ B_1..d| div d`` with the integer depth
-    weights above — how much the expensive reranker actually reorders
-    what lexical retrieval found, weighted toward the top.  A doc
-    enters the agreement set at depth max(rank_A, rank_B), so the
-    per-depth overlap is one GREATEST + count, never a per-depth join.
-
-    Scale: two top-20 lists joined on doc_id; the first-stage costs are
-    those of the underlying queries (posting-pruned scans)."""
-    from concurrent_etl_go_spark.operators.search import text_bm25_search
-    from concurrent_etl_go_spark.operators.search2 import (
-        search_cross_encoder_rerank,
-    )
-
-    wa = Window.orderBy(F.desc("bm25"), "doc_id")
-    a = (
-        text_bm25_search(spark, sf_dir)
-        .select("doc_id", F.row_number().over(wa).alias("bm25_rank"))
-        .where(F.col("bm25_rank") <= RBO_DEPTH)
-    )
-    b = search_cross_encoder_rerank(spark, sf_dir).select(
-        "doc_id", F.col("rank").alias("xe_rank")
-    ).where(F.col("xe_rank") <= RBO_DEPTH)
-    common = scoped_persist(
-        a.join(b, "doc_id").select(
-            "doc_id",
-            F.greatest("bm25_rank", "xe_rank").alias("m"),
-        )
-    )
-    weights = spark.createDataFrame(
-        [(d + 1, w) for d, w in enumerate(_RBO_W)], "d long, wt long"
-    )
-    terms = weights.crossJoin(common).groupBy("d", "wt").agg(
-        F.sum(F.when(F.col("m") <= F.col("d"), 1).otherwise(0)).alias(
-            "x_d"
-        )
-    )
-    n_common = common.agg(
-        F.count(F.lit(1)).cast("long").alias("n_common")
-    )
-    return (
-        terms.agg(
-            F.expr("CAST(SUM(wt * x_d div d) AS BIGINT)").alias("rbo_e9")
-        )
-        .crossJoin(n_common)
-        .select(
-            F.lit(RBO_DEPTH).cast("long").alias("depth"),
-            "n_common",
-            "rbo_e9",
-        )
-    )
-
-
-# The oracle above needs the BM25 and rerank subqueries inlined.  The
-# substitution cannot run at THIS module's import time (operators.search
-# imports llm.text, so importing operators.search from inside the llm
-# package init is circular); operators/__init__.py calls this after
-# every module is fully loaded.  Idempotent by construction.
-def _inline_rbo_oracle() -> None:
-    from concurrent_etl_go_spark.operators.registry import ORACLES
-    from concurrent_etl_go_spark.operators.search import (
-        BM25_TOP_K,
-        _BM25_SCORED_SQL,
-    )
-
-    if "{bm25}" not in ORACLES["search_eval_rbo"]:
-        return  # already inlined
-    bm25 = f"""
-      WITH {_BM25_SCORED_SQL}
-      SELECT doc_id, ROUND(score, 4) AS bm25 FROM scored
-      ORDER BY ROUND(score, 4) DESC, doc_id LIMIT {BM25_TOP_K}
-    """
-    xe = ORACLES["search_cross_encoder_rerank"]
-    ORACLES["search_eval_rbo"] = (
-        ORACLES["search_eval_rbo"]
-        .replace("{bm25}", bm25)
-        .replace("{xe}", xe)
-    )
-    assert "{bm25}" not in ORACLES["search_eval_rbo"]
-
-
-# Lazy safety net (ADVICE r12): if a consumer imports this module (or
-# the llm package) WITHOUT importing concurrent_etl_go_spark.operators,
-# the registry's accessor overrides drain this finalizer on first
-# oracle lookup, so nobody can fetch the placeholder SQL.
-from concurrent_etl_go_spark.operators.registry import (  # noqa: E402
-    register_oracle_finalizer,
-)
-
-register_oracle_finalizer(_inline_rbo_oracle)
 
 
 @query(

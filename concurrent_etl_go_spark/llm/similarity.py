@@ -15,7 +15,7 @@ import math
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from concurrent_etl_go_spark.llm.kmeans import kmeans_fit
+from concurrent_etl_go_spark.llm.kmeans import EmptyCorpusError, kmeans_fit
 from concurrent_etl_go_spark.operators.registry import query, scoped_persist
 from concurrent_etl_go_spark.sources.readers import read_table
 
@@ -357,8 +357,8 @@ def rp_lsh_pairs(
 def similarity_rp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Production RP-LSH near-dup pairs at cosine >= 0.3.
 
-    Decade-scaling attribution (round-11; ``scripts/scale_rp_lsh.py``
-    -> committed ``SCALE_RP_LSH.json``): the measured act exponent
+    Decade-scaling attribution (round-11, committed
+    ``SCALE_RP_LSH.json``): the measured act exponent
     (1.22-1.28 over sf0.1 -> sf1) is OUTPUT-CARDINALITY-BOUND, not a
     plan defect.  The answer itself grows at exponent 1.96 (207,986 ->
     18,860,853 pairs — enumeration at tau 0.3 over label-clustered
@@ -390,7 +390,10 @@ def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     nprobe, k_clusters = 3, 8
     vectors = _vectors(spark, sf_dir)
-    assigned, centroids = kmeans_fit(vectors, k=k_clusters, iterations=3)
+    try:
+        assigned, centroids = kmeans_fit(vectors, k=k_clusters, iterations=3)
+    except EmptyCorpusError:  # zero-row embeddings: nothing to rank
+        return spark.createDataFrame([], "vec_id long, sim double")
 
     qrow = vectors.where(F.col("vec_id") == 0).select("v", "norm").first()
     q, qn = list(qrow.v), float(qrow.norm)

@@ -28,59 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
-#: Deferred oracle fix-ups.  A few oracles are registered with
-#: placeholders that can only be inlined after OTHER operator modules
-#: have loaded (e.g. ``search_eval_rbo`` embeds the BM25/rerank oracle
-#: SQL, but importing ``operators.search`` from inside the llm package
-#: init is circular).  ``operators/__init__`` runs these eagerly; the
-#: accessor overrides below run them lazily so a consumer that imports
-#: only a sub-package still gets valid SQL instead of literal
-#: ``{placeholder}`` text.
-ORACLE_FINALIZERS: list[Callable[[], None]] = []
-
-
-def register_oracle_finalizer(fn: Callable[[], None]) -> None:
-    ORACLE_FINALIZERS.append(fn)
-
-
-def run_oracle_finalizers() -> None:
-    while ORACLE_FINALIZERS:
-        # pop BEFORE calling: finalizers may themselves read ORACLES
-        # (idempotence checks), which would otherwise recurse forever
-        ORACLE_FINALIZERS.pop()()
-
-
-class _OracleDict(dict):
-    """Oracle store that drains pending finalizers on access, so every
-    lookup path — ``ORACLES[name]``, ``.get``, ``.items`` — yields
-    finalized SQL regardless of import order.  (``dict(ORACLES)``'s
-    C-level fast path bypasses these overrides; the operator package
-    init runs the finalizers eagerly, which covers that path for every
-    consumer that imports ``concurrent_etl_go_spark.operators``.)"""
-
-    def __getitem__(self, name):
-        run_oracle_finalizers()
-        return super().__getitem__(name)
-
-    def get(self, name, default=None):
-        run_oracle_finalizers()
-        return super().get(name, default)
-
-    def items(self):
-        run_oracle_finalizers()
-        return super().items()
-
-    def values(self):
-        run_oracle_finalizers()
-        return super().values()
-
-    def copy(self):
-        run_oracle_finalizers()
-        return dict(super().items())
-
-
 QUERIES: dict[str, QueryFn] = {}
-ORACLES: dict[str, str] = _OracleDict()
+ORACLES: dict[str, str] = {}
 SCALE_CLASS: dict[str, str] = {}
 
 #: scale_class values:

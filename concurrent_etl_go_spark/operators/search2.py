@@ -18,6 +18,15 @@ exchange — and then semi-joined to the 50-doc shortlist, so the
 expensive pairwise features cost O(|shortlist| x matched positions),
 not O(corpus).  That is precisely the economics that make reranking
 affordable at 100 TB.
+
+``search_eval_rbo`` scores how far the rerank moves the BM25 ranking
+(``operators/search.py``) with RANK-BIASED OVERLAP (Webber, Moffat &
+Zobel 2010): the top-weighted agreement measure for indefinite
+rankings, here the truncated-sum form at depth 20 with persistence
+p = 0.9.  Its per-depth weights ``round(1e9 * (1-p) * p^(d-1))`` are
+precomputed in Python once and embedded as the same int64 literals in
+both dialects, so the score is a pure integer sum (order-independent,
+bit-exact); its oracle inlines both rankings' oracle SQL.
 """
 
 from __future__ import annotations
@@ -27,6 +36,11 @@ from pyspark.sql import functions as F
 
 from concurrent_etl_go_spark.llm.text import tokens
 from concurrent_etl_go_spark.operators.registry import query, scoped_persist
+from concurrent_etl_go_spark.operators.search import (
+    BM25_TOP_K,
+    _BM25_SCORED_SQL,
+    text_bm25_search,
+)
 from concurrent_etl_go_spark.sources.readers import read_table
 
 #: Fixed retrieval query (real corpus vocabulary; the BM25 terms plus a
@@ -37,10 +51,7 @@ XE_TOP_K = 20
 
 _XE_TERMS_SQL = ", ".join(f"'{t}'" for t in XE_TERMS)
 
-
-@query(
-    "search_cross_encoder_rerank",
-    oracle=f"""
+_XE_ORACLE_SQL = f"""
     WITH pos AS MATERIALIZED (
       SELECT doc_id, u.term, u.pos
       FROM (SELECT doc_id, string_split(text, ' ') AS toks
@@ -86,8 +97,10 @@ _XE_TERMS_SQL = ", ".join(f"'{t}'" for t in XE_TERMS)
            coverage, tf_total, CAST(min_gap AS BIGINT) AS min_gap
     FROM feat
     ORDER BY score_e6 DESC, doc_id LIMIT {XE_TOP_K}
-    """,
-)
+    """
+
+
+@query("search_cross_encoder_rerank", oracle=_XE_ORACLE_SQL)
 def search_cross_encoder_rerank(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -167,4 +180,107 @@ def search_cross_encoder_rerank(
         )
         .orderBy(F.desc("score_e6"), "doc_id")
         .limit(XE_TOP_K)
+    )
+
+
+#: RBO persistence and integer depth weights: w_d = round(1e9*(1-p)*
+#: p^(d-1)) for d = 1..20 — the geometric top-weighting, frozen as
+#: int64 literals shared by both engines.
+RBO_P = 0.9
+RBO_DEPTH = 20
+_RBO_W = tuple(
+    round(1e9 * (1 - RBO_P) * RBO_P ** (d - 1))
+    for d in range(1, RBO_DEPTH + 1)
+)
+_RBO_W_SQL = ", ".join(str(w) for w in _RBO_W)
+
+#: The text_bm25_search ranking as DuckDB SQL, inlined into the RBO
+#: oracle beside the rerank oracle.
+_BM25_TOP_SQL = f"""
+      WITH {_BM25_SCORED_SQL}
+      SELECT doc_id, ROUND(score, 4) AS bm25 FROM scored
+      ORDER BY ROUND(score, 4) DESC, doc_id LIMIT {BM25_TOP_K}
+    """
+
+
+@query(
+    "search_eval_rbo",
+    oracle=f"""
+    WITH w AS (
+      SELECT unnest([{_RBO_W_SQL}]) AS wt,
+             unnest(range(1, {RBO_DEPTH + 1})) AS d
+    ),
+    a AS (
+      SELECT doc_id, bm25_rank FROM (
+        SELECT doc_id, row_number() OVER (ORDER BY bm25 DESC, doc_id)
+                 AS bm25_rank
+        FROM ({_BM25_TOP_SQL}) t
+      ) WHERE bm25_rank <= {RBO_DEPTH}
+    ),
+    b AS (
+      SELECT doc_id, rank AS xe_rank FROM ({_XE_ORACLE_SQL}) t
+      WHERE rank <= {RBO_DEPTH}
+    ),
+    common AS (
+      SELECT a.doc_id, GREATEST(a.bm25_rank, b.xe_rank) AS m
+      FROM a JOIN b USING (doc_id)
+    ),
+    terms AS (
+      SELECT w.d, w.wt,
+             (SELECT COUNT(*) FROM common WHERE common.m <= w.d) AS x_d
+      FROM w
+    )
+    SELECT CAST({RBO_DEPTH} AS BIGINT) AS depth,
+           (SELECT CAST(COUNT(*) AS BIGINT) FROM common) AS n_common,
+           CAST(SUM(wt * x_d // d) AS BIGINT) AS rbo_e9
+    FROM terms
+    """,
+)
+def search_eval_rbo(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Rank-biased overlap (p = 0.9) between the BM25 top-20 and the
+    cross-encoder rerank top-20: the truncated geometric sum
+    ``sum_d w_d * |A_1..d ∩ B_1..d| div d`` with the integer depth
+    weights above — how much the expensive reranker actually reorders
+    what lexical retrieval found, weighted toward the top.  A doc
+    enters the agreement set at depth max(rank_A, rank_B), so the
+    per-depth overlap is one GREATEST + count, never a per-depth join.
+
+    Scale: two top-20 lists joined on doc_id; the first-stage costs are
+    those of the underlying queries (posting-pruned scans)."""
+    wa = Window.orderBy(F.desc("bm25"), "doc_id")
+    a = (
+        text_bm25_search(spark, sf_dir)
+        .select("doc_id", F.row_number().over(wa).alias("bm25_rank"))
+        .where(F.col("bm25_rank") <= RBO_DEPTH)
+    )
+    b = search_cross_encoder_rerank(spark, sf_dir).select(
+        "doc_id", F.col("rank").alias("xe_rank")
+    ).where(F.col("xe_rank") <= RBO_DEPTH)
+    common = scoped_persist(
+        a.join(b, "doc_id").select(
+            "doc_id",
+            F.greatest("bm25_rank", "xe_rank").alias("m"),
+        )
+    )
+    weights = spark.createDataFrame(
+        [(d + 1, w) for d, w in enumerate(_RBO_W)], "d long, wt long"
+    )
+    terms = weights.crossJoin(common).groupBy("d", "wt").agg(
+        F.sum(F.when(F.col("m") <= F.col("d"), 1).otherwise(0)).alias(
+            "x_d"
+        )
+    )
+    n_common = common.agg(
+        F.count(F.lit(1)).cast("long").alias("n_common")
+    )
+    return (
+        terms.agg(
+            F.expr("CAST(SUM(wt * x_d div d) AS BIGINT)").alias("rbo_e9")
+        )
+        .crossJoin(n_common)
+        .select(
+            F.lit(RBO_DEPTH).cast("long").alias("depth"),
+            "n_common",
+            "rbo_e9",
+        )
     )

@@ -12,10 +12,14 @@ exercised here on purpose). Rows-only queries are executed and
 canonicalized but not compared.
 
     python scripts/driver_dryrun.py [sf_dir] [--window N] [--all]
+    python scripts/driver_dryrun.py <sf_dir> --only name1,name2,...
 
 Exit code 1 if any window query errors or mismatches. Run this before
 every round handoff — it is the closest local replica of
-CORRECTNESS_r{N}.json.
+CORRECTNESS_r{N}.json.  ``--only`` runs exactly the named queries (an
+unknown name is reported and exits 1): use it after changing a shared
+helper to re-prove every affected query, at sf0.01 and sf0.1, before
+rotating them into the round window.
 """
 
 from __future__ import annotations
@@ -27,10 +31,7 @@ REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO_ROOT not in sys.path:
     sys.path.insert(0, REPO_ROOT)
 
-TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
+from concurrent_etl_go_spark.schemas import TABLES  # noqa: E402
 
 
 def canonicalize(df):
@@ -93,6 +94,10 @@ def main() -> int:
         )
 
     qs, oracles = entry_mod.queries(), entry_mod.oracle_sql()
+    unknown = [n for n in only if n not in qs]
+    if unknown:
+        print(f"unknown queries: {unknown}")
+        return 1
     names = [n for n in qs if n in only] if only else list(qs)[:window]
     failures = []
     transcript: dict[str, dict] = {}

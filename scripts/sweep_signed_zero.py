@@ -33,10 +33,7 @@ REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO_ROOT not in sys.path:
     sys.path.insert(0, REPO_ROOT)
 
-TABLES = (
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-)
+from concurrent_etl_go_spark.schemas import TABLES  # noqa: E402
 
 
 def sweep(sf_dir: str) -> list[tuple[str, str, object]]:

@@ -91,6 +91,34 @@ def test_ivfpq_topk_on_zero_row_embeddings(spark, tmp_path):
     assert out.collect() == []
 
 
+def test_ivfpq_portable_queries_on_zero_row_embeddings_match_oracles(
+    spark, tmp_path
+):
+    """No query row, so the query LUT is empty; both portable twins
+    return their oracles' empty frames."""
+    sf_dir = _table_dir(tmp_path, "embeddings", _empty)
+    for name in ("embeddings_pq_assign_portable", "similarity_ivfpq_portable"):
+        got, want = _query_vs_oracle(spark, name, sf_dir, "embeddings")
+        assert len(want) == 0 and len(got) == 0
+        problems = frames_match(got, want)
+        assert not problems, f"{name}: " + "; ".join(problems)
+
+
+def test_kmeans_queries_on_zero_row_embeddings_are_empty(spark, tmp_path):
+    """``kmeans_fit`` finds no seed vectors; both rows-only queries
+    return their usual schema with zero rows."""
+    from concurrent_etl_go_spark.operators import QUERIES
+
+    sf_dir = _table_dir(tmp_path, "embeddings", _empty)
+    for name, schema in (
+        ("similarity_kmeans", "struct<vec_id:bigint,cluster:int,sq_dist:double>"),
+        ("similarity_ivf_topk", "struct<vec_id:bigint,sim:double>"),
+    ):
+        out = QUERIES[name](spark, sf_dir)
+        assert out.schema.simpleString() == schema, name
+        assert out.collect() == [], name
+
+
 def _zeroed(table: pa.Table) -> pa.Table:
     emb = table.column("embedding")
     zeros = pa.array(

@@ -17,19 +17,7 @@ import pandas as pd
 import pytest
 
 import __spark_entry__ as entry_mod
-
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+from concurrent_etl_go_spark.schemas import TABLES
 
 
 def oracle_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:

@@ -1,6 +1,11 @@
-"""Safety net over the whole registry: every query (including rows-only
-ones) runs at sf0.001, has unique sane column names (the driver sorts
-columns by name before hashing), and a stable schema across calls."""
+"""Safety net over the whole registry: every query at sf0.001 has unique
+sane column names (the driver sorts columns by name before hashing), a
+stable schema across calls and an executed plan free of cartesian
+products and row-path Python.
+
+Each query is built twice here (the second build is the schema-stability
+check) and executed once across tier-1: rows-only queries by ``count()``
+here, oracle-backed queries by ``tests/test_oracle_parity.py``."""
 
 from __future__ import annotations
 
@@ -13,11 +18,29 @@ import __spark_entry__ as entry_mod
 import concurrent_etl_go_spark
 
 ALL = sorted(entry_mod.queries())
+ORACLE_BACKED = set(entry_mod.oracle_sql())
+
+#: Queries whose semantics genuinely need Arrow-batched Python — the
+#: bounded as-of merge runs one pd.merge_asof per partition (MapInPandas).
+#: Nothing is allowed to use scalar pandas UDFs in projections
+#: (ArrowEvalPython): every scalar expression must stay in codegen.
+ARROW_ALLOWLIST = {
+    "join_asof",
+    "join_asof_left",
+    # nearest = backward + forward cogroup passes (two MapInPandas)
+    "join_asof_nearest",
+    # binary media decode has no JVM expression form — Arrow-batched by
+    # design (llm/multimodal.py)
+    "multimodal_image_features",
+    "multimodal_audio_features",
+}
 
 
 def test_oracles_are_subset_of_queries():
     qs, os_ = entry_mod.queries(), entry_mod.oracle_sql()
     assert set(os_) <= set(qs)
+    # oracle text is complete at import: nothing left to substitute
+    assert not [n for n, sql in os_.items() if "{bm25}" in sql or "{xe}" in sql]
     # rows-only queries are the documented non-SQL-expressible set
     assert set(qs) - set(os_) == {
         "agg_approx",
@@ -65,9 +88,19 @@ def test_query_runs_with_sane_schema(spark, sf_dir, name):
     assert len(set(cols)) == len(cols), f"duplicate column names: {cols}"
     for c in cols:
         assert re.fullmatch(r"[a-z][a-z0-9_]*", c), f"unsane column name: {c}"
+    # plan invariants: cross joins must broadcast, no row-at-a-time Python
+    # (BatchEvalPython) and no scalar pandas UDFs (ArrowEvalPython);
+    # Python appears only Arrow-batched via MapInPandas where semantics
+    # demand it
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    for marker in ("CartesianProduct", "BatchEvalPython", "ArrowEvalPython"):
+        assert marker not in plan, f"{marker} in the executed plan"
+    if name not in ARROW_ALLOWLIST:
+        assert "MapInPandas" not in plan, "MapInPandas outside the allowlist"
     # stable schema across invocations
     assert df.schema == fn(spark, sf_dir).schema
-    assert df.count() >= 0
+    if name not in ORACLE_BACKED:
+        assert df.count() >= 0
 
 
 def test_driver_window_rotation():

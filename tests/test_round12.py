@@ -93,7 +93,7 @@ def test_rerank_score_is_lexicographic(spark):
 
 
 def test_rbo_bounds(spark):
-    from concurrent_etl_go_spark.llm.retrieval_eval2 import _RBO_W
+    from concurrent_etl_go_spark.operators.search2 import _RBO_W
 
     (row,) = _rows(spark, "search_eval_rbo")
     # full agreement at every depth would score sum(w_d); zero overlap 0
