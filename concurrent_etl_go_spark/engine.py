@@ -53,12 +53,18 @@ class RunReport:
 
     The reference logs CPU count, goroutine count, heap stats and total
     wall-clock (etl/main.go:466-485,159); the engine reports the Spark
-    equivalents plus counters: ``delivered_rows`` POSTed with a 2xx and
-    ``spilled_rows`` written to the DLQ, from the sink's task results (one
-    per partition); ``extracted_rows`` = delivered + spilled - replayed;
-    ``quarantined_rows`` from an accumulator, which an extract stage that
-    Spark recomputes after a fault adds to again. ``phases``: replay count,
-    lazy plan (no job) and ``load_s``, the sink action from extract to POST.
+    equivalents plus counters, all taken inside the one sink action:
+
+    - counted: ``delivered_rows`` POSTed with a 2xx and ``spilled_rows``
+      written to the DLQ, from the sink's task results (one per
+      partition); ``extracted_rows`` (fetched OK) and ``quarantined_rows``
+      (fetch failed), from accumulators in the extract's tasks — an
+      extract stage that Spark recomputes after a fault adds to them again;
+    - derived: ``replayed_rows`` = delivered + spilled - extracted, the
+      DLQ rows the sink carried (no job reads the DLQ to count them).
+
+    ``phases``: DLQ listing and scan plan (no job), lazy plan (no job) and
+    ``load_s``, the sink action from extract to POST.
     """
 
     default_parallelism: int = 0
@@ -88,7 +94,7 @@ def run_etl(
     """The reference's whole ``main`` as one Spark run.
 
     1. DLQ replay scan (S20-S22): spilled batches become a source that
-       joins the transformed rows in step 4.
+       joins the transformed rows in step 4; planned, not counted.
     2. Appliance CSV scan + malformed drop (S1-S3).
     3. Extract fan-out (S4-S6): ``fanout_partitions`` x
        ``extractor.concurrency`` bounds in-flight fetches — the semaphore
@@ -122,11 +128,10 @@ def run_etl(
     replayed_files = dlq_files(sink.dlq_dir)
     report.spill_files_before = len(replayed_files)
     replayed = None
-    # don't spend a Spark job on an empty DLQ, nor the union node (plan/
-    # codegen cost on the latency-critical load job) for a zero-row side
+    # don't plan a scan of an empty DLQ, nor the union node (plan/codegen
+    # cost on the latency-critical load job) for a zero-row side
     if replayed_files:
         replayed = read_dlq(spark, replayed_files, schemas.DEVICE_DATA)
-        report.replayed_rows = replayed.count()
     report.phases["dlq_replay_s"] = round(time.perf_counter() - t0, 3)
 
     t0 = time.perf_counter()
@@ -140,7 +145,10 @@ def run_etl(
     # No cache on the extract: a cached extract delayed the first POST until
     # every fetch was done, and added jobs that re-read it for counters.
     quarantined = spark.sparkContext.accumulator(0)
-    extracted = run_extract(appliances, fetch_fn, extractor, quarantined=quarantined)
+    fetched = spark.sparkContext.accumulator(0)
+    extracted = run_extract(
+        appliances, fetch_fn, extractor, quarantined=quarantined, fetched=fetched
+    )
     ok, _ = quarantine_split(extracted)
     merged = transform_cpu_stats(ok)
     if replayed is not None:
@@ -153,8 +161,9 @@ def run_etl(
     report.delivered_rows, report.spilled_rows = run_http_sink(merged, sink)
     report.phases["load_s"] = round(time.perf_counter() - t0, 3)
     report.quarantined_rows = quarantined.value
-    report.extracted_rows = (
-        report.delivered_rows + report.spilled_rows - report.replayed_rows
+    report.extracted_rows = fetched.value
+    report.replayed_rows = (
+        report.delivered_rows + report.spilled_rows - report.extracted_rows
     )
 
     # ack: this run's sink pass is done; replayed inputs either landed or

@@ -152,10 +152,12 @@ def run_extract(
     config: ExtractorConfig = ExtractorConfig(),
     clock: Callable[[], int] | None = None,
     quarantined: Accumulator | None = None,
+    fetched: Accumulator | None = None,
 ) -> DataFrame:
     """Fetch per appliance inside ``mapInPandas`` (S4), stamping the extract
     timestamp (etl/main.go:202) and enforcing the per-call deadline (S5).
-    Fetch failures become error rows, counted into ``quarantined`` if given."""
+    Fetch failures become error rows, counted into ``quarantined`` if given;
+    successful fetches are counted into ``fetched`` if given."""
     fetch_one = guarded_fetch(
         fetch_fn,
         clock or (lambda: int(time.time())),
@@ -174,8 +176,11 @@ def run_extract(
                     concurrency,
                     pool,
                 )
+                failed = sum(row["error"] is not None for row in out)
                 if quarantined is not None:
-                    quarantined.add(sum(row["error"] is not None for row in out))
+                    quarantined.add(failed)
+                if fetched is not None:
+                    fetched.add(len(out) - failed)
                 yield pd.DataFrame(
                     out, columns=[f.name for f in EXTRACT_RESULT]
                 )

@@ -11,16 +11,25 @@ decode, re-enqueue, delete after enqueue. Engine deviations (SURVEY
 Replayed rows are a second source beside the extract: ``replay_union``
 appends them to the transformed rows before the hash route, so a device's
 replayed rows reach the same sink lane as its fresh ones (the reference
-re-enqueues them into its loader lanes, etl/main.go:329-331).
+re-enqueues them into its loader lanes, etl/main.go:329-331). Nothing
+counts them on their own: ``run_etl`` derives the replayed row count from
+the sink's totals, so the DLQ files are read once, by the sink's job.
+
+A spill file holds exactly the bytes its batch POSTed (the wire contract
+in ``sinks.http_sink``), so ``replay_dlq_posts`` re-POSTs them as read.
 """
 
 from __future__ import annotations
 
 import glob
+import gzip
 import os
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from concurrent_etl_go_spark.sinks.http_sink import post_batch
 
 
 def dlq_files(dlq_dir: str) -> list[str]:
@@ -32,7 +41,9 @@ def read_dlq(spark: SparkSession, files: list[str], schema: T.StructType) -> Dat
     """Read the spilled batches in ``files`` (S21), as listed by
     ``dlq_files``: the caller clears exactly the files it replayed.
     ``spark.read.json`` decompresses ``.gz`` transparently; the explicit
-    schema avoids inference."""
+    schema avoids inference, so this plans a scan without running a job.
+    Spark's JSON reader takes back everything the sink's writer emits,
+    the quoted ``"NaN"``/``"Infinity"`` doubles included."""
     # each file is a JSON *array* -> multiLine mode parses it as rows
     return spark.read.schema(schema).option("multiLine", "true").json(files)
 
@@ -59,7 +70,9 @@ def replay_dlq_posts(
     dlq_dir: str, config, orphan_min_age_s: float = 300.0
 ) -> tuple[int, int]:
     """Re-POST every spilled batch under its ORIGINAL idempotency key,
-    ack-then-delete — the exactly-once half of the DLQ story.
+    ack-then-delete — the exactly-once half of the DLQ story. The body is
+    the spill file's decompressed bytes, unchanged: the bytes the direct
+    path POSTed.
 
     A keyed spill carries its chunk's original key in a ``<path>.key``
     sidecar (written by ``spill_batch`` before the data file); the
@@ -94,13 +107,7 @@ def replay_dlq_posts(
     Returns ``(replayed, remaining)`` file counts.  Driver-side by
     design: the DLQ is a local spill directory, bounded by failure
     volume, not data volume."""
-    import gzip as _gzip
-    import json as _json
-    import time as _time
-
-    from concurrent_etl_go_spark.sinks.http_sink import post_batch
-
-    now = _time.time()
+    now = time.time()
     for sidecar in glob.glob(
         os.path.join(dlq_dir, "buffer_failed_worker*.json.gz.key")
     ):
@@ -116,8 +123,8 @@ def replay_dlq_posts(
     replayed = 0
     files = dlq_files(dlq_dir)
     for path in files:
-        with _gzip.open(path, "rt", encoding="utf-8") as fh:
-            batch = _json.load(fh)
+        with gzip.open(path, "rb") as fh:
+            payload = fh.read()
         sidecar = path + ".key"
         if os.path.exists(sidecar):
             with open(sidecar, encoding="utf-8") as fh:
@@ -125,7 +132,7 @@ def replay_dlq_posts(
         else:
             key = f"dlq/{os.path.basename(path)}"
         try:
-            post_batch(batch, config, idem_key=key)
+            post_batch(payload, config, idem_key=key)
         except Exception:  # noqa: BLE001 — leave the file for next replay
             continue
         os.remove(path)

@@ -8,20 +8,34 @@ Reference behavior re-expressed (etl/main.go:240-305,378-394):
   shuffle upstream routes rows to lanes),
 - JSON array payload (S17), POST with Authorization + Content-Type and a
   client timeout (S18),
-- on failure, spill the batch as gzip JSON to the DLQ (S19) — with UNIQUE
-  filenames per spill: the reference's per-worker ``os.Create`` overwrite
-  (which silently loses earlier failed batches in the same run,
-  etl/main.go:379) is a deliberate deviation documented in SURVEY §7.4.2,
+- on failure, spill the batch as gzip JSON to the DLQ (S19) — the same
+  bytes that were POSTed, with UNIQUE filenames per spill: the
+  reference's per-worker ``os.Create`` overwrite (which silently loses
+  earlier failed batches in the same run, etl/main.go:379) is a
+  deliberate deviation documented in SURVEY §7.4.2,
 - bounded retry with backoff before spilling (engine extension; default 0
   retries matches the reference's single attempt).
 
 Everything runs executor-side; the driver never sees a row.
+
+Wire contract. Each row is encoded once, in the JVM, as one JSON object
+(``to_json`` over a struct of the row's columns, ``encode_rows``); a
+batch is those documents joined as ``[doc,doc,...]``:
+
+- top-level decimal columns are sent as their plain string
+  (``.cast("string")``, ``1.23`` -> ``"1.23"``),
+- top-level binary columns are sent as lowercase hex (``"0102"``),
+- NULL fields stay as explicit ``null`` keys (``ignoreNullFields`` off),
+- everything else, nested values included, is Spark's JSON writer:
+  timestamps are ISO-8601 in the session time zone, dates
+  ``yyyy-MM-dd``, NaN and +-Infinity the strings ``"NaN"``,
+  ``"Infinity"`` and ``"-Infinity"``, floats at their own precision,
+  compact separators. ``sinks.dlq.read_dlq`` reads all of these back.
 """
 
 from __future__ import annotations
 
 import gzip
-import json
 import os
 import time
 import urllib.error
@@ -31,7 +45,9 @@ from collections.abc import Iterable, Iterator
 from dataclasses import dataclass
 
 from pyspark import TaskContext
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 @dataclass(frozen=True)
@@ -55,11 +71,11 @@ class HttpSinkConfig:
     idempotency_scope: str = ""
 
 
-def chunked(rows: Iterable[dict], size: int) -> Iterator[list[dict]]:
+def chunked(items: Iterable, size: int) -> Iterator[list]:
     """Threshold flush (S14) + final partial flush (S15) as a chunker."""
-    batch: list[dict] = []
-    for row in rows:
-        batch.append(row)
+    batch: list = []
+    for item in items:
+        batch.append(item)
         if len(batch) >= size:
             yield batch
             batch = []
@@ -67,24 +83,33 @@ def chunked(rows: Iterable[dict], size: int) -> Iterator[list[dict]]:
         yield batch
 
 
-def _json_default(value):
-    """Serialize non-JSON-native Spark row values (datetime/date/Decimal,
-    bytearray) instead of failing the task — a timestamp column must not be
-    able to take down the sink stage."""
-    if isinstance(value, (bytes, bytearray)):
-        return value.hex()
-    return str(value)
+def _wire_column(field: T.StructField) -> Column:
+    """A top-level column as the wire contract sends it (module docstring)."""
+    col = F.col("`" + field.name.replace("`", "``") + "`")
+    if isinstance(field.dataType, T.DecimalType):
+        col = col.cast("string")
+    elif isinstance(field.dataType, T.BinaryType):
+        col = F.lower(F.hex(col))
+    return col.alias(field.name)
 
 
-def post_batch(
-    batch: list[dict], config: HttpSinkConfig, idem_key: str = ""
-) -> None:
-    """One JSON-array POST (S17/S18). Raises on non-2xx or transport error.
+def encode_rows(df: DataFrame) -> DataFrame:
+    """One string column ``doc``: each row as a JSON object, encoded in the
+    JVM by Spark's JSON writer. A projection, so the partitions (the sink's
+    lanes) are kept as they are."""
+    row = F.struct(*[_wire_column(f) for f in df.schema.fields])
+    return df.select(
+        F.to_json(row, {"ignoreNullFields": "false"}).alias("doc")
+    )
+
+
+def post_batch(payload: bytes, config: HttpSinkConfig, idem_key: str = "") -> None:
+    """One JSON-array POST (S17/S18) of the encoded ``payload``. Raises on
+    non-2xx or transport error.
 
     ``idem_key``, when non-empty, rides as an ``Idempotency-Key`` header
     so a replayed delivery (foreachBatch epoch replay, DLQ re-post after
     a crash between ack and delete) is detectable by the receiver."""
-    payload = json.dumps(batch, default=_json_default).encode("utf-8")
     headers = {
         "Content-Type": "application/json",
         "Authorization": f"Bearer {config.auth_token}",
@@ -100,12 +125,14 @@ def post_batch(
 
 
 def spill_batch(
-    batch: list[dict],
+    payload: bytes,
     worker_id: int,
     config: HttpSinkConfig,
     idem_key: str = "",
 ) -> str:
-    """DLQ spill (S19): gzip JSON array, unique filename per spill.
+    """DLQ spill (S19): the encoded JSON-array ``payload``, gzipped, unique
+    filename per spill — a failed batch's file holds exactly the bytes
+    that were POSTed.
 
     With an idempotency key the filename is DETERMINISTIC (derived from
     the key): a replayed epoch that re-spills the same chunk overwrites
@@ -133,19 +160,21 @@ def spill_batch(
     if idem_key:
         with open(path + ".key", "w", encoding="utf-8") as fh:
             fh.write(idem_key)
-    with gzip.open(path, "wt", encoding="utf-8") as fh:
-        json.dump(batch, fh, default=_json_default)
+    with gzip.open(path, "wb") as fh:
+        fh.write(payload)
     return path
 
 
-def sink_partition(rows, config: HttpSinkConfig) -> tuple[int, int]:
-    """Per-partition sink loop: chunk -> POST (with bounded retry) -> spill
-    on exhausted retries. Runs on the executor; returns (posted, spilled) rows."""
+def sink_partition(docs: Iterable[str], config: HttpSinkConfig) -> tuple[int, int]:
+    """Per-partition sink loop over JSON documents: chunk -> join into one
+    ``[doc,doc,...]`` payload -> POST (with bounded retry) -> spill the
+    payload on exhausted retries. Runs on the executor; returns (posted,
+    spilled) rows."""
     posted = spilled = 0
     ctx = TaskContext.get()
     worker_id = ctx.partitionId() if ctx is not None else 0
-    dicts = (row.asDict(recursive=True) for row in rows)
-    for seq, batch in enumerate(chunked(dicts, config.batch_size)):
+    for seq, batch in enumerate(chunked(docs, config.batch_size)):
+        payload = ("[" + ",".join(batch) + "]").encode("utf-8")
         idem_key = (
             f"{config.idempotency_scope}/p{worker_id}/c{seq}"
             if config.idempotency_scope
@@ -154,14 +183,12 @@ def sink_partition(rows, config: HttpSinkConfig) -> tuple[int, int]:
         attempt = 0
         while True:
             try:
-                post_batch(batch, config, idem_key)
+                post_batch(payload, config, idem_key)
                 posted += len(batch)
                 break
-            # TypeError: belt-and-braces — if a payload still defies JSON
-            # encoding the batch must spill, not fail the Spark task.
-            except (urllib.error.URLError, OSError, RuntimeError, TypeError):
+            except (urllib.error.URLError, OSError, RuntimeError):
                 if attempt >= config.max_retries:
-                    spill_batch(batch, worker_id, config, idem_key)
+                    spill_batch(payload, worker_id, config, idem_key)
                     spilled += len(batch)
                     break
                 time.sleep(config.backoff_s * (2**attempt))
@@ -171,10 +198,13 @@ def sink_partition(rows, config: HttpSinkConfig) -> tuple[int, int]:
 
 def run_http_sink(df: DataFrame, config: HttpSinkConfig) -> tuple[int, int]:
     """Sink a DataFrame: each partition is a lane (route upstream with
-    ``repartition(n_lanes, key)`` — see plans.route_lanes). One
-    ``rdd.mapPartitions(...).collect()`` job; returns ``(rows_posted,
-    rows_spilled)`` summed from the task results, which count once per
-    partition."""
-    parts = df.rdd.mapPartitions(lambda rows: [sink_partition(rows, config)])
+    ``repartition(n_lanes, key)`` — see plans.route_lanes). Rows are
+    encoded in the JVM (``encode_rows``), so the Python tasks only join,
+    POST and spill bytes. One ``rdd.mapPartitions(...).collect()`` job;
+    returns ``(rows_posted, rows_spilled)`` summed from the task results,
+    which count once per partition."""
+    parts = encode_rows(df).rdd.mapPartitions(
+        lambda rows: [sink_partition((row[0] for row in rows), config)]
+    )
     counts = parts.collect()
     return sum(p for p, _ in counts), sum(s for _, s in counts)

@@ -73,6 +73,15 @@ def main() -> int:
         # all-queries re-proof is auditable, not just claimed
         json_out = sys.argv[sys.argv.index("--json-out") + 1]
 
+    import __spark_entry__ as entry_mod
+
+    # the registry needs no session: reject unknown names before Spark starts
+    qs, oracles = entry_mod.queries(), entry_mod.oracle_sql()
+    unknown = [n for n in only if n not in qs]
+    if unknown:
+        print(f"unknown queries: {unknown}")
+        return 1
+
     spark = (
         SparkSession.builder.master("local[8]")
         # hostile-TZ probe: the engine must pin UTC itself
@@ -81,7 +90,6 @@ def main() -> int:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    import __spark_entry__ as entry_mod
     from concurrent_etl_go_spark.operators.registry import release_caches
 
     edf = entry_mod.entry(spark)
@@ -93,11 +101,6 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
 
-    qs, oracles = entry_mod.queries(), entry_mod.oracle_sql()
-    unknown = [n for n in only if n not in qs]
-    if unknown:
-        print(f"unknown queries: {unknown}")
-        return 1
     names = [n for n in qs if n in only] if only else list(qs)[:window]
     failures = []
     transcript: dict[str, dict] = {}

@@ -44,6 +44,7 @@ class MockApiState:
     dedup_keys: bool = False
     seen_keys: set = field(default_factory=set)
     duplicate_posts: int = 0
+    rejected_bodies: list[bytes] = field(default_factory=list)  # failed POSTs
     lock: threading.Lock = field(default_factory=threading.Lock)
 
 
@@ -83,9 +84,11 @@ class MockApiServer:
                         and idem_key != ""
                         and idem_key in state.seen_keys
                     )
-                    if duplicate:
+                    if fail:
+                        state.rejected_bodies.append(body)
+                    elif duplicate:
                         state.duplicate_posts += 1
-                    elif not fail:
+                    else:
                         if state.dedup_keys and idem_key:
                             state.seen_keys.add(idem_key)
                         state.requests.append(

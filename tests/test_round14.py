@@ -15,6 +15,7 @@
 
 from __future__ import annotations
 
+import json
 import os
 import time
 
@@ -111,7 +112,7 @@ def test_replay_sweeps_orphan_key_sidecars(mock_api, tmp_path):
         idempotency_scope="run1",
     )
     # a real keyed spill (data file + sidecar)
-    path = spill_batch([{"a": 1}], 0, config, idem_key="run1/p0/c0")
+    path = spill_batch(json.dumps([{"a": 1}]).encode(), 0, config, idem_key="run1/p0/c0")
     assert os.path.exists(path + ".key")
     # an orphan sidecar: crash between sidecar write and data write
     orphan = os.path.join(
@@ -148,7 +149,7 @@ def test_replay_keeps_sidecar_when_post_fails(mock_api, tmp_path):
         dlq_dir=dlq_dir,
         idempotency_scope="run2",
     )
-    path = spill_batch([{"a": 2}], 1, config, idem_key="run2/p1/c0")
+    path = spill_batch(json.dumps([{"a": 2}]).encode(), 1, config, idem_key="run2/p1/c0")
     mock_api.state.fail_all = True
     try:
         replayed, remaining = replay_dlq_posts(dlq_dir, config)

@@ -13,6 +13,7 @@
 from __future__ import annotations
 
 import gzip
+import json
 import os
 import time
 
@@ -57,7 +58,7 @@ def test_crash_mid_spill_orphan_reclaimed_once_aged(
 
     monkeypatch.setattr(http_sink.gzip, "open", crash_open)
     with pytest.raises(OSError, match="injected crash"):
-        spill_batch([{"a": 1}], 0, config, idem_key="run15/p0/c0")
+        spill_batch(json.dumps([{"a": 1}]).encode(), 0, config, idem_key="run15/p0/c0")
     monkeypatch.setattr(http_sink.gzip, "open", real_open)
 
     orphan = os.path.join(
@@ -104,7 +105,7 @@ def test_sweep_spares_live_spill_sidecar_toctou(mock_api, tmp_path):
 
     # the spill completes (same deterministic name), then a later
     # replay delivers it
-    path = spill_batch([{"a": 7}], 3, config, idem_key="run16/p3/c7")
+    path = spill_batch(json.dumps([{"a": 7}]).encode(), 3, config, idem_key="run16/p3/c7")
     assert path + ".key" == sidecar
     replayed, remaining = replay_dlq_posts(config.dlq_dir, config)
     assert (replayed, remaining) == (1, 0)

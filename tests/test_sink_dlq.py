@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import gzip
 import json
+import math
 import os
 
 import pytest
@@ -174,7 +175,8 @@ def test_worker_id_parse_from_spill_filenames(spark, tmp_path):
 def test_timestamp_decimal_columns_sink_without_typeerror(spark, mock_api, tmp_path):
     """Regression: json.dumps raised TypeError on datetime/date/Decimal rows,
     failing the Spark task instead of POSTing (or at worst spilling). The
-    sink must serialize them (default=str) and deliver every row."""
+    sink must serialize them (the wire contract in ``sinks.http_sink``) and
+    deliver every row."""
     df = spark.range(5).select(
         F.col("id"),
         F.to_timestamp(F.lit("2026-01-02 03:04:05")).alias("ts"),
@@ -194,3 +196,99 @@ def test_timestamp_decimal_columns_sink_without_typeerror(spark, mock_api, tmp_p
     assert row["ts"].startswith("2026-01-02")
     assert row["amount"] == "1.23"
     assert row["blob"] == "0102"
+
+
+def test_device_rows_arrive_parse_equal_to_their_python_dicts(
+    spark, mock_api, tmp_path
+):
+    """The JVM encoder sends a DeviceData row, zero-default casts included,
+    as the same JSON value Python's encoder made of ``row.asDict``."""
+    df = make_device_df(spark, n=120)
+    config = HttpSinkConfig(
+        endpoint=mock_api.endpoint, batch_size=50, dlq_dir=str(tmp_path / "dlq")
+    )
+    run_http_sink(df, config)
+    want = {
+        row.name: json.loads(json.dumps(row.asDict(recursive=True)))
+        for row in df.collect()
+    }
+    got = {row["name"]: row for r in mock_api.state.requests for row in r.batch}
+    assert got == want
+    assert got["device-50"]["indicators"][1] == {"name": "nice", "value": 0.0}
+
+
+def test_null_top_level_field_arrives_as_a_null_key(spark, mock_api, tmp_path):
+    """Also under a column name that Spark would parse as a nested path."""
+    df = spark.range(3).select(
+        "id",
+        F.lit(None).cast("string").alias("note.text"),
+        F.when(F.col("id") == 1, F.lit(1.5)).alias("x"),
+    )
+    config = HttpSinkConfig(endpoint=mock_api.endpoint, dlq_dir=str(tmp_path / "dlq"))
+    run_http_sink(df, config)
+    rows = sorted(
+        (row for r in mock_api.state.requests for row in r.batch),
+        key=lambda row: row["id"],
+    )
+    assert rows == [
+        {"id": 0, "note.text": None, "x": None},
+        {"id": 1, "note.text": None, "x": 1.5},
+        {"id": 2, "note.text": None, "x": None},
+    ]
+
+
+def test_spill_file_holds_the_rejected_bytes_and_replays_them_unchanged(
+    spark, mock_api, tmp_path
+):
+    from concurrent_etl_go_spark.sinks.dlq import replay_dlq_posts
+
+    df = make_device_df(spark, n=30).coalesce(1)
+    config = HttpSinkConfig(
+        endpoint=mock_api.endpoint,
+        dlq_dir=str(tmp_path / "dlq"),
+        idempotency_scope="wire",
+    )
+    mock_api.state.fail_remaining = 1
+    assert run_http_sink(df, config) == (0, 30)
+    [rejected] = mock_api.state.rejected_bodies
+    [path] = dlq_files(config.dlq_dir)
+    with gzip.open(path, "rb") as fh:
+        assert fh.read() == rejected
+
+    assert replay_dlq_posts(config.dlq_dir, config) == (1, 0)
+    [replayed] = mock_api.state.requests
+    assert replayed.body == rejected
+    assert replayed.idem_key == "wire/p0/c0"
+
+
+def reject_bare_token(token: str):
+    raise ValueError(f"bare {token} is not JSON")
+
+
+def test_nan_and_infinite_indicators_round_trip_through_the_dlq(
+    spark, mock_api, tmp_path
+):
+    """Spark writes non-finite doubles as quoted strings (valid JSON), and
+    ``read_dlq`` reads them back as the same doubles."""
+    values = [("utilization", float("nan")), ("nice", float("-inf")),
+              ("user", float("inf")), ("system", 2.5)]
+    df = spark.createDataFrame(
+        [("device-nan", "0", 1751450637, values)], schemas.DEVICE_DATA
+    )
+    config = HttpSinkConfig(endpoint=mock_api.endpoint, dlq_dir=str(tmp_path / "dlq"))
+    mock_api.state.fail_all = True
+    assert run_http_sink(df, config) == (0, 1)
+    spills = dlq_files(config.dlq_dir)
+    with gzip.open(spills[0], "rt") as fh:
+        [doc] = json.load(fh, parse_constant=reject_bare_token)
+    assert [i["value"] for i in doc["indicators"]] == [
+        "NaN", "-Infinity", "Infinity", 2.5,
+    ]
+
+    [row] = read_dlq(spark, spills, schemas.DEVICE_DATA).collect()
+    got = [i.value for i in row.indicators]
+    assert math.isnan(got[0])
+    assert got[1:] == [float("-inf"), float("inf"), 2.5]
+    assert (row.name, row.cpu_number, row.timestamp) == (
+        "device-nan", "0", 1751450637,
+    )

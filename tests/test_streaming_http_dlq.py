@@ -21,6 +21,7 @@ key-deduplicating receiver, under every crash window the design admits:
 
 from __future__ import annotations
 
+import json
 import os
 import time
 
@@ -178,7 +179,7 @@ def test_dlq_replay_crash_between_ack_and_delete(tmp_path, mock_api):
     dlq = str(tmp_path / "dlq2")
     config = HttpSinkConfig(endpoint=mock_api.endpoint, dlq_dir=dlq)
     mock_api.state.dedup_keys = True
-    batch = [{"event_id": i, "value": i * 1.5} for i in range(5)]
+    batch = json.dumps([{"event_id": i, "value": i * 1.5} for i in range(5)]).encode()
     spill_batch(batch, worker_id=3, config=config, idem_key="e7/p3/c0")
     assert len(dlq_files(dlq)) == 1
 
@@ -218,7 +219,7 @@ def test_respill_same_key_overwrites_not_duplicates(tmp_path):
         endpoint="http://127.0.0.1:9/load",  # never contacted
         dlq_dir=str(tmp_path / "dlq3"),
     )
-    batch = [{"event_id": 1}]
+    batch = json.dumps([{"event_id": 1}]).encode()
     p1 = spill_batch(batch, 0, config, idem_key="e2/p0/c1")
     p2 = spill_batch(batch, 0, config, idem_key="e2/p0/c1")
     assert p1 == p2 and len(dlq_files(config.dlq_dir)) == 1
@@ -240,7 +241,7 @@ def test_dlq_replay_reuses_original_chunk_key(tmp_path, mock_api):
     dlq = str(tmp_path / "dlq4")
     config = HttpSinkConfig(endpoint=mock_api.endpoint, dlq_dir=dlq)
     mock_api.state.dedup_keys = True
-    batch = [{"event_id": i} for i in range(4)]
+    batch = json.dumps([{"event_id": i} for i in range(4)]).encode()
     # epoch crash window: chunk spilled, no marker, query killed
     path = spill_batch(batch, worker_id=2, config=config, idem_key="e5/p2/c0")
     assert os.path.exists(path + ".key"), "keyed spill must write sidecar"
@@ -260,7 +261,7 @@ def test_dlq_replay_reuses_original_chunk_key(tmp_path, mock_api):
 def test_post_batch_sends_idempotency_key(mock_api):
     """Wire check: the header rides the POST and is recorded."""
     config = HttpSinkConfig(endpoint=mock_api.endpoint, auth_token="t")
-    post_batch([{"a": 1}], config, idem_key="e0/p0/c0")
-    post_batch([{"a": 2}], config)  # unkeyed stays unkeyed
+    post_batch(json.dumps([{"a": 1}]).encode(), config, idem_key="e0/p0/c0")
+    post_batch(json.dumps([{"a": 2}]).encode(), config)  # unkeyed stays unkeyed
     keys = [r.idem_key for r in mock_api.state.requests]
     assert keys == ["e0/p0/c0", ""]
