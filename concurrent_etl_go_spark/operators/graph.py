@@ -5,8 +5,9 @@ bounded-hop BFS, k-core peeling, synchronous label propagation and
 weighted SSSP (connected components lives in ``llm/dedup.py``), plus
 ``symmetric``, the one edge symmetrization every graph module uses.
 Each round is one join + one aggregation keyed by node, checkpointed
-per the loop contract in ``registry.checkpoint_round``; only scalar
-convergence telemetry crosses the driver.
+per the loop contract in ``registry.checkpoint_round`` — except the
+k-core peel, whose fixed rounds are one windowed filter each and stay
+lazy; only scalar convergence telemetry crosses the driver.
 
 Reference parity: generalizes the reference's iterate-until-drained
 worker loop (etl/main.go:240-262) to data-dependent fixpoint iteration.
@@ -16,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from concurrent_etl_go_spark.operators.registry import (
     checkpoint_count,
@@ -148,22 +150,24 @@ def kcore_peel(
     Fixed rounds (not a fixpoint loop) so an unrolled SQL oracle can
     state the identical computation; when the peel converges within the
     budget the result IS the k-core (pytest-pinned).  Per round: one
-    degree hash-agg + two semi-joins on the node key — linear in the
-    surviving edges.
-    """
-    sym = symmetric(edges)
-    cur = sym
-    for k in range(rounds):
-        keep = (
-            cur.groupBy("src")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .where(F.col("deg") >= min_degree)
-            .select(F.col("src").alias("id"))
-        )
-        cur = checkpoint_round(
-            cur.join(keep, cur["src"] == keep["id"], "left_semi")
-            .join(keep, cur["dst"] == keep["id"], "left_semi"),
-            cur if k else None,
+    projection counts each edge's endpoint degrees with two windows
+    (``count(*)`` over ``src`` and over ``dst`` — the edge list stays
+    symmetric, so a node's ``dst`` count is its degree too), then a
+    filter keeps edges whose endpoints both reach ``min_degree``.  Both
+    counts read the same round's edges, so the rounds do not mix.  The
+    loop stays lazy: the rounds run inside the caller's action instead
+    of one eager checkpoint job each."""
+    cur = symmetric(edges)
+    for _ in range(rounds):
+        cur = (
+            cur.select(
+                "src",
+                "dst",
+                F.count(F.lit(1)).over(Window.partitionBy("src")).alias("ds"),
+                F.count(F.lit(1)).over(Window.partitionBy("dst")).alias("dd"),
+            )
+            .where((F.col("ds") >= min_degree) & (F.col("dd") >= min_degree))
+            .select("src", "dst")
         )
     return cur.groupBy(F.col("src").alias("id")).agg(
         F.count(F.lit(1)).alias("degree")

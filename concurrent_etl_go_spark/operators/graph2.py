@@ -554,8 +554,9 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver scale the peel converges earlier, making the fixed form
     equal to the fixpoint, and ``tests/test_llm_ops.py`` pins
     convergence).  Engine rounds run ``operators/graph.py::kcore_peel``
-    — one degree hash-agg + two semi-joins on the node key, linear per
-    round."""
+    — one projection of both endpoint degrees (two windows) and one
+    filter per round, lazy with no checkpoint: the rounds run inside
+    the caller's action."""
     from concurrent_etl_go_spark.operators.graph import kcore_peel
 
     e = _copurchase_edges(spark, sf_dir)

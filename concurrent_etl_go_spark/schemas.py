@@ -1,7 +1,8 @@
 """Explicit schemas for every record type the engine touches.
 
 The reference is fully static-schema (Go structs with JSON tags); the engine
-mirrors that discipline: schema inference is used nowhere. Reference structs:
+mirrors that discipline: schema inference is used nowhere but on the shared
+parquet tables' footers (below). Reference structs:
 
 - ``Appliance``  -> APPLIANCE     (reference: etl/main.go:27-30)
 - ``CpuStats``   -> CPU_STATS     (reference: etl/main.go:32-41 — numerics
@@ -11,7 +12,9 @@ mirrors that discipline: schema inference is used nowhere. Reference structs:
   array<struct<name,value>> column)
 
 The shared analytics tables (TESTDATA.md) are parquet with embedded schemas;
-TABLES lists their names for view registration.
+``sources/readers.py::read_table`` infers each one once per file per process
+and reads it with that schema afterwards. TABLES lists their names for view
+registration.
 """
 
 from __future__ import annotations

@@ -4,43 +4,77 @@ The reference eagerly materializes its whole CSV input in driver memory
 (``r.ReadAll()``, reference etl/main.go:408) — the canonical anti-pattern at
 100 TB. Every reader here is a lazy Spark scan: splittable, predicate- and
 projection-pushdown-capable, never driver-materialized.
+
+The shared parquet tables carry their schema in the footer; ``read_table``
+infers it once per file per process (Spark runs a one-task job to read a
+footer) and plans every later read of that file with the inferred schema,
+so building a query over a table already read runs no Spark job.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.errors.exceptions.captured import AnalysisException
 
 from concurrent_etl_go_spark import schemas
 
-#: Per-path cache of parquet-footer timestamp[ns] column names.  Almost
-#: every table has bigint columns, so without this every query build pays
-#: a driver-side pyarrow footer read per table.  Keyed by path only: the
-#: testdata is immutable within a process lifetime (the driver regenerates
-#: it only between rounds, i.e. between processes).
-_NS_COLS_CACHE: dict[str, frozenset[str]] = {}
+#: Per-process memo of each parquet file's read schema: path -> (file
+#: identity ``(st_size, st_mtime_ns)``, Spark's inferred schema, the
+#: footer's nanosecond-timestamp column names, read as bigint under
+#: ``nanosAsLong``).  A file rewritten at the same path no longer matches
+#: its identity and is inferred again, replacing the entry.  Entries hold
+#: no rows, frames or plans.
+_SCHEMAS: dict[str, tuple[tuple[int, int], T.StructType, frozenset[str]]] = {}
 
 
-def _footer_ns_cols(path: str) -> frozenset[str]:
-    """timestamp[ns] columns per the parquet footer, memoized by path."""
-    cols = _NS_COLS_CACHE.get(path)
-    if cols is None:
+def _infer_schema(
+    spark: SparkSession, path: str
+) -> tuple[T.StructType, frozenset[str]]:
+    """Spark's inferred schema of ``path`` and its nanosecond-timestamp
+    columns.
+
+    Spark rejects TIMESTAMP(NANOS) parquet columns by default: on
+    PARQUET_TYPE_ILLEGAL the inference retries with ``nanosAsLong``, so
+    those columns surface as bigint.  The memoized bigint schema reads
+    them again without the conf."""
+    try:
+        schema = spark.read.parquet(path).schema
+    except AnalysisException as exc:
+        if "PARQUET_TYPE_ILLEGAL" not in str(exc):
+            raise
+        # Session-level knob; deliberately left set — it only changes how
+        # nanos-parquet is read, which always needs read_table's conversion.
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        schema = spark.read.parquet(path).schema
+
+    # Nanosecond timestamp columns in the footer (tz-naive or not) surface
+    # as bigint under nanosAsLong (including on the first attempt once the
+    # conf is set) — always reconcile against the footer, not just on the
+    # retry path.
+    long_cols = {f.name for f in schema if isinstance(f.dataType, T.LongType)}
+    ns_cols: frozenset[str] = frozenset()
+    if long_cols:
+        import pyarrow as pa
         import pyarrow.parquet as pq
 
-        cols = frozenset(
-            f.name for f in pq.read_schema(path) if str(f.type) == "timestamp[ns]"
-        )
-        _NS_COLS_CACHE[path] = cols
-    return cols
+        ns_cols = frozenset(
+            f.name
+            for f in pq.read_schema(path)
+            if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+        ) & long_cols
+    return schema, ns_cols
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one shared analytics parquet table (TESTDATA.md).
 
-    Handles TIMESTAMP(NANOS) parquet columns, which Spark rejects by
-    default: on PARQUET_TYPE_ILLEGAL the read retries with
-    ``nanosAsLong`` and converts the raw nanosecond longs to microsecond
+    The schema is inferred once per file per process (``_SCHEMAS``);
+    every call still builds a fresh scan of the file.  TIMESTAMP(NANOS)
+    columns, read as raw nanosecond longs, are converted to microsecond
     timestamps with integer division (a double division would lose
     precision: epoch-nanos exceed the 53-bit double mantissa). Truncation
     to microseconds matches how DuckDB/Arrow read the same files.
@@ -52,34 +86,30 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
 
     path = f"{sf_dir}/{name}.parquet"
-    try:
-        df = spark.read.parquet(path)
-    except AnalysisException as exc:
-        if "PARQUET_TYPE_ILLEGAL" not in str(exc):
-            raise
-        # Session-level knob; deliberately left set — it only changes how
-        # nanos-parquet is read, which always needs the conversion below.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-
-    # Columns that are timestamp[ns] in the footer surface as bigint under
-    # nanosAsLong (including on the first attempt once the conf is set) —
-    # always reconcile against the footer, not just on the retry path.
-    long_cols = {n for n, t in df.dtypes if t == "bigint"}
-    if long_cols:
-        for c in _footer_ns_cols(path) & long_cols:
-            df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
+    st = os.stat(path)
+    identity = (st.st_size, st.st_mtime_ns)
+    entry = _SCHEMAS.get(path)
+    if entry is None or entry[0] != identity:
+        entry = _SCHEMAS[path] = (identity, *_infer_schema(spark, path))
+    _, schema, ns_cols = entry
+    df = spark.read.schema(schema).parquet(path)
 
     # tz-naive parquet timestamps (timestamp[us/ms] without isAdjustedToUTC)
     # surface as TIMESTAMP_NTZ. The engine's contract is TIMESTAMP (ltz)
-    # under the UTC-pinned session everywhere — the type the nanos path
-    # above produces, and the one epoch/interval functions (unix_micros,
-    # casts to double) accept. With the session at UTC this cast is a pure
-    # reinterpretation: same wall-clock, same epoch value.
-    for c, t in df.dtypes:
-        if t == "timestamp_ntz":
-            df = df.withColumn(c, F.col(c).cast("timestamp"))
-    return df
+    # under the UTC-pinned session everywhere — the type the nanos
+    # conversion produces, and the one epoch/interval functions
+    # (unix_micros, casts to double) accept. With the session at UTC this
+    # cast is a pure reinterpretation: same wall-clock, same epoch value.
+    engine_types = {
+        c: F.timestamp_micros(F.expr(f"`{c}` div 1000")) for c in ns_cols
+    }
+    engine_types.update(
+        (f.name, df[f.name].cast("timestamp"))
+        for f in schema
+        if isinstance(f.dataType, T.TimestampNTZType)
+    )
+    # one projection for every converted column
+    return df.withColumns(engine_types) if engine_types else df
 
 
 def register_views(spark: SparkSession, sf_dir: str, tables=schemas.TABLES) -> None:

@@ -3,6 +3,8 @@ MinHash-LSH, SimHash, IVF ANN, language-ID, multimodal plumbing."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -1037,7 +1039,6 @@ def test_kcore_fixed_rounds_reach_fixpoint_on_chain_and_cycle(spark):
         _KCORE_MIN_DEGREE,
         _KCORE_ROUNDS,
     )
-    from concurrent_etl_go_spark.operators.registry import release_caches
 
     # cycle 1-2-3-4-1 with chain 4-10-11-12 (3 pendant links: converges
     # in 3 rounds < _KCORE_ROUNDS)
@@ -1051,7 +1052,6 @@ def test_kcore_fixed_rounds_reach_fixpoint_on_chain_and_cycle(spark):
             edges, _KCORE_MIN_DEGREE, _KCORE_ROUNDS
         ).collect()
     }
-    release_caches()
     # true 2-core: just the cycle, every node at degree exactly 2
     assert got == {1: 2, 2: 2, 3: 2, 4: 2}
 
@@ -1060,8 +1060,33 @@ def test_kcore_fixed_rounds_reach_fixpoint_on_chain_and_cycle(spark):
     partial = {
         r.id: r.degree for r in kcore_peel(edges, 2, rounds=1).collect()
     }
-    release_caches()
     assert partial != got
+
+    # a 6-link pendant chain 4-20-...-25 that 4 rounds cannot peel: every
+    # round budget matches a pure-Python peel that reads each round's
+    # degrees from that round's edges only
+    pairs = [(1, 2), (2, 3), (3, 4), (1, 4), (4, 20)] + [
+        (n, n + 1) for n in range(20, 25)
+    ]
+    edges = spark.createDataFrame(pairs, "src long, dst long")
+    for rounds in range(1, 6):
+        cur = set(pairs) | {(b, a) for a, b in pairs}
+        for _ in range(rounds):
+            deg = Counter(a for a, _ in cur)
+            cur = {
+                (a, b)
+                for a, b in cur
+                if min(deg[a], deg[b]) >= _KCORE_MIN_DEGREE
+            }
+        want = dict(Counter(a for a, _ in cur))
+        got = {
+            r.id: r.degree
+            for r in kcore_peel(edges, _KCORE_MIN_DEGREE, rounds).collect()
+        }
+        assert got == want, rounds
+        # one chain link per round: the cycle's 4 nodes and 6 - rounds
+        # chain nodes survive
+        assert len(want) == 4 + 6 - rounds
 
 
 def test_sssp_weighted_relaxation_and_early_exit(spark):
